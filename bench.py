@@ -1,5 +1,6 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1)
-on local[$SPARK_GRAFT_CPUS]. Prints the full JSON line:
+on local[$SPARK_GRAFT_CPUS] (default: this host's usable cores). Prints the
+full JSON line:
 {"metric": ..., "value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}
 followed by a compact tail-capture-proof summary line (same metric/value/
 unit/sf, per-query map referenced via bench_out.json).
@@ -27,7 +28,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
-from etl_pipeline_spark.session import get_spark
+from etl_pipeline_spark.session import default_cpus, get_spark
 from etl_pipeline_spark.utils.session_cache import clear_caches
 
 HEADLINE = [
@@ -178,7 +179,8 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
     sf = float(m.group(1).rstrip(".")) if m else -1.0
-    spark = get_spark(app_name="etl-pipeline-spark-bench")
+    cpus = default_cpus()
+    spark = get_spark(app_name="etl-pipeline-spark-bench", cpus=cpus)
     spark.sparkContext.setLogLevel("ERROR")
     _ensure_loaded()
 
@@ -233,7 +235,6 @@ def main() -> None:
         timings[name] = round(best, 3)
         total += best
 
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     metric = (
         "headline suite wall clock (noop sink, best-of-2 per query,"
         " session memos + cache cleared before every pass)"
@@ -244,7 +245,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "coverage": {"benched": len(suite), "registered": len(REGISTRY)},
     }
     if errors:
@@ -275,7 +276,7 @@ def main() -> None:
         "value": round(total, 3),
         "unit": "sec",
         "sf": sf,
-        "cpus": int(cpus),
+        "cpus": cpus,
         "coverage": out["coverage"],
         "error_count": len(errors),
         "queries_full": f"bench_out_c{cpus}.json",

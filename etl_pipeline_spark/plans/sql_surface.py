@@ -16,33 +16,38 @@ Each query here also pins a plan shape the DataFrame modules don't:
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.star import TABLES, load_table
 from etl_pipeline_spark.utils.session_cache import register_cache, session_key
 
-# Last sf_dir whose tables are registered as this session's temp views.
-# Re-registering 10 views per spark.sql query is pure driver-side catalog
-# chatter; skip it when the views already point at the right dataset, and
-# re-register (createOrReplaceTempView) when a session switches sf_dir.
+# Per-(session, table): the sf_dir this session's temp view of that table
+# points at. A query registers only the tables its SQL names, and skips
+# any whose view already points at the right dataset; a table read from
+# another sf_dir is re-pointed (createOrReplaceTempView).
 _VIEWS_MEMO: dict = register_cache({})
 
+# A star table is referenced when its name appears as a word of the SQL
+# text. Over-matching (a name in a comment) only registers a spare view.
+_TABLE_WORD = re.compile(r"\b(?:" + "|".join(TABLES) + r")\b", re.IGNORECASE)
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose every star-schema table as a temp view for spark.sql use."""
-    key = (session_key(spark),)
-    if _VIEWS_MEMO.get(key) == sf_dir:
-        return
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-    _VIEWS_MEMO[key] = sf_dir
+
+def register_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
+    """Expose the star-schema tables ``sql`` names as temp views."""
+    sid = session_key(spark)
+    for name in sorted({w.lower() for w in _TABLE_WORD.findall(sql)}):
+        if _VIEWS_MEMO.get((sid, name)) != sf_dir:
+            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
+            _VIEWS_MEMO[(sid, name)] = sf_dir
 
 
 def _sql_query(name: str, sql: str, doc: str, tags: tuple[str, ...]):
     @register(name, oracle=sql, doc=doc, tags=tags)
     def fn(spark: SparkSession, sf_dir: str, _sql: str = sql) -> DataFrame:
-        register_views(spark, sf_dir)
+        register_views(spark, sf_dir, _sql)
         return spark.sql(_sql)
 
     return fn
@@ -197,8 +202,9 @@ _IGN_SELECT = """
     tags=("sql", "window"),
 )
 def sql_last_value_ignore_nulls(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_IGN_SELECT.format(spark_mark="", duck_mark=" IGNORE NULLS"))
+    sql = _IGN_SELECT.format(spark_mark="", duck_mark=" IGNORE NULLS")
+    register_views(spark, sf_dir, sql)
+    return spark.sql(sql)
 
 
 # Arg-max aggregate (max_by): deterministic even under balance ties via an
@@ -322,7 +328,7 @@ _EWMA_SPARK = """
     tags=("sql", "timeseries", "lambda"),
 )
 def sql_ewma_user_values(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
+    register_views(spark, sf_dir, _EWMA_SPARK)
     return spark.sql(_EWMA_SPARK)
 
 
@@ -392,8 +398,9 @@ def _pii_sql(engine: str) -> str:
     tags=("sql", "text", "pii"),
 )
 def sql_pii_redaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    register_views(spark, sf_dir)
-    return spark.sql(_pii_sql("spark"))
+    sql = _pii_sql("spark")
+    register_views(spark, sf_dir, sql)
+    return spark.sql(sql)
 
 
 # Exact-interpolation percentile fences (percentile_cont WITHIN GROUP is

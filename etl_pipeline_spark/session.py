@@ -1,7 +1,8 @@
 """SparkSession factory tuned for this engine.
 
-Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default 32 threads); the
-same configuration knobs are the ones that matter on a real cluster:
+Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default: the cores this
+process may run on); the same configuration knobs are the ones that matter
+on a real cluster:
 
 - AQE on (coalesce post-shuffle partitions, skew-join splitting) — replaces
   the reference's hand-rolled "adaptive tuning" layer
@@ -20,6 +21,16 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` if set, else the cores this process may run on."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "").strip()
+    if not raw:
+        return len(os.sched_getaffinity(0))
+    if not raw.isdigit() or int(raw) < 1:
+        raise ValueError(f"SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return int(raw)
+
+
 def get_spark(
     app_name: str = "etl-pipeline-spark",
     cpus: int | str | None = None,
@@ -27,7 +38,7 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or fetch) a SparkSession with the engine's standard config."""
-    cpus = cpus or os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = cpus or default_cpus()
     builder = (
         SparkSession.builder.appName(app_name)
         .master(f"local[{cpus}]")

@@ -25,8 +25,10 @@ from pyspark.sql import functions as F
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read the events table as a file stream with an event_time column."""
+    from etl_pipeline_spark.sources.star import _events_ts_to_epoch_ns, parquet_schema
+
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    schema = parquet_schema(f"{sf_dir}/events.parquet")
     # the file-stream source requires a directory: stream the sf_dir with a
     # glob selecting only the events file
     raw = (
@@ -37,8 +39,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # normalize ts to epoch-ns bigint whatever the parquet physical type —
     # the one shared tz-proof conversion (works on streaming DataFrames too)
-    from etl_pipeline_spark.sources.star import _events_ts_to_epoch_ns
-
     raw = _events_ts_to_epoch_ns(raw)
     return raw.withColumn("event_time", F.timestamp_micros(F.expr("ts div 1000")))
 

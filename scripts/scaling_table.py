@@ -20,6 +20,11 @@ def main() -> None:
     lo = json.load(open(sys.argv[2]))
     qh, ql = hi["queries"], lo["queries"]
     common = sorted(set(qh) & set(ql))
+    if not common:
+        sys.exit(
+            f"n_common 0: {sys.argv[1]} ({len(qh)} queries) and {sys.argv[2]}"
+            f" ({len(ql)} queries) share no query; nothing to compare"
+        )
     ratios = {k: ql[k] / max(qh[k], 1e-9) for k in common}
     g = math.exp(sum(math.log(max(r, 1e-9)) for r in ratios.values()) / len(common))
     print(

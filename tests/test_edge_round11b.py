@@ -150,10 +150,8 @@ def test_zscore_zero_sigma_group_is_null(spark, tmp_path):
     ]
     sf, con = _write_events(spark, tmp_path, rows)
     spec = REGISTRY["sql_zscore_normalize_events"]
-    # the shared-text SQL surface runs the SAME string in both engines;
-    # register just the events view (register_views wants all ten tables)
-    spark.read.parquet(f"{sf}/events.parquet").createOrReplaceTempView("events")
-    df = spark.sql(spec.oracle)  # must not crash under ANSI
+    # the shared-text SQL surface runs the SAME string in both engines
+    df = spec.spark_fn(spark, sf)  # must not crash under ANSI
     got = {r["event_id"]: r["value_z"] for r in df.collect()}
     assert got[1] is None and got[2] is None and got[3] is None
     assert got[4] is not None and got[4] < 0 and got[5] > 0

@@ -158,10 +158,8 @@ def test_keep_first_orders_nulls_last_in_both_engines(spark, tmp_path):
     ]
     sf, con = _write_orders(spark, tmp_path, rows)
     spec = REGISTRY["sql_keep_first_per_key"]
-    # shared-text surface: run the SAME string in both engines (the
-    # spark_fn's register_views wants all ten tables — the 11b device)
-    spark.read.parquet(f"{sf}/orders.parquet").createOrReplaceTempView("orders")
-    df = spark.sql(spec.oracle)
+    # shared-text surface: the SAME string runs in both engines
+    df = spec.spark_fn(spark, sf)
     got = {r["o_custkey"]: r["o_orderkey"] for r in df.collect()}
     assert got == {1: 11, 2: 20}
     assert_oracle_match(df, con, spec.oracle, "keep_first_nulls_last")

@@ -22,6 +22,22 @@ def _plan(spark, df) -> str:
     )
 
 
+def _smj_keys(plan: str) -> list[str]:
+    """The ``Left keys``/``Right keys`` lines of every SortMergeJoin in a
+    formatted plan. The tree line names the node but not its keys; the
+    keys sit in the node's numbered detail block, one line each."""
+    import re
+
+    keys, in_smj = [], False
+    for ln in plan.splitlines():
+        header = re.match(r"\(\d+\) (\S+)", ln)
+        if header:
+            in_smj = header.group(1) == "SortMergeJoin"
+        elif in_smj and ln.startswith(("Left keys", "Right keys")):
+            keys.append(ln)
+    return keys
+
+
 def test_q1_pushdown_and_pruning(spark):
     plan = _plan(spark, REGISTRY["q1_pricing_summary"].spark_fn(spark, SF_DIR))
     assert "LessThanOrEqual(l_shipdate" in plan  # predicate reaches the scan
@@ -825,7 +841,17 @@ def test_exact_shingle_verifiers_are_df_capped(spark):
         # join on the shingle column (the joins that remain are the
         # doc-keyed size lookups)
         assert "explode(flatten(transform(docs#" in plan, q
-        assert not re.search(r"SortMergeJoin.*shingle", plan), q
+        assert not [k for k in _smj_keys(plan) if "shingle" in k], q
+
+
+def test_smj_key_guard_sees_a_shingle_keyed_join(spark):
+    """The guard above must be able to fail: on a plan that does carry a
+    shingle-keyed SortMergeJoin, ``_smj_keys`` reports the shingle keys
+    on both sides."""
+    a = spark.range(10).selectExpr("id AS doc_a", "CAST(id % 3 AS STRING) AS shingle")
+    b = a.withColumnRenamed("doc_a", "doc_b")
+    keys = _smj_keys(_plan(spark, a.hint("merge").join(b, "shingle")))
+    assert len(keys) == 2 and all("shingle#" in k for k in keys), keys
 
 
 def test_df_cap_drops_hot_shingles(spark):
