@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from etl_pipeline_spark.sources.star import parquet_schema
 from etl_pipeline_spark.utils.local_rows import sql_literal, values_df
 from etl_pipeline_spark.utils.parallelism import fan_out_scan
 from etl_pipeline_spark.utils.session_cache import register_cache, session_key
@@ -1390,6 +1391,15 @@ def build_ivfpq_index(
     ).write.mode("overwrite").parquet(f"{path}/codebook")
 
 
+def _read_index_part(spark, path: str, part: str) -> DataFrame:
+    """One unpartitioned artifact of a persisted index, with the schema
+    read from its parquet footer so the load fires no inference job.
+    (``codes`` is partitioned by ``cell``, a column no part file holds, so
+    it keeps Spark's own discovery.)"""
+    p = f"{path}/{part}"
+    return spark.read.schema(parquet_schema(p)).parquet(p)
+
+
 def query_ivfpq_index(
     spark,
     path: str,
@@ -1407,14 +1417,12 @@ def query_ivfpq_index(
     ivfpq_topk_relational — same values, same ordering."""
     pivots = [
         (r.cell, [float(x) for x in r.pe], r.pn)
-        for r in sorted(
-            spark.read.parquet(f"{path}/pivots").collect(), key=lambda r: r.cell
-        )
+        for r in sorted(_read_index_part(spark, path, "pivots").collect(), key=lambda r: r.cell)
     ]
     entries = [
         (r.sub, r.code, r.cc, [float(x) for x in r.center])
         for r in sorted(
-            spark.read.parquet(f"{path}/codebook").collect(),
+            _read_index_part(spark, path, "codebook").collect(),
             key=lambda r: (r.sub, r.code),
         )
     ]

@@ -1,4 +1,4 @@
-"""Central query registry — the contract surface the driver checks.
+"""Central query registry — the surface ``__spark_entry__`` exports.
 
 Every operator claimed in SURVEY.md §2 lands here as a named ``QuerySpec``:
 a Spark callable ``(spark, sf_dir) -> DataFrame`` plus (where expressible)
@@ -48,267 +48,15 @@ def register(
     return deco
 
 
-
-# Export order. The driver's correctness run processes exactly the first
-# 50 registered queries per round, and the window ROTATES each round —
-# the top-50 below is round 11's window; everything after it is ordered
-# stalest-first (latest driver row recomputed from the CORRECTNESS_r01–
-# r10 union) so round 12's window is simply the next 50 names. Round 11
-# leads with the six queries whose REACHABLE HELPERS or ORACLE TEXT
-# changed in round 10 without a same-round driver re-proof (the r10
-# verdict's rotation-trigger gap: the NULL-payload kernel wave touched
-# operators/multimodal.py and the aHash oracle at multimodal_plan.py,
-# and the session-cache LRU cap touched the memoized-relation plumbing
-# under pagerank/textrank, but only the registered-function diff drove
-# the window), then the round-11 waves: the exact-cents revenue
-# conversions (q3/q5/q6/q10/q15/q19 + probe-found q7/skew — the q1
-# sum_disc_price device; q9 stays on ROUND(SUM) by the documented
-# dense-rational supplycost convention), the empty-/one-row-input
-# totality waves, the proactive -0.0/constant-series wave, and the
-# hostile-input wave (malformed-JSON payloads + embedding validity,
-# bugs 44-45) — 50 changed queries total (the wave displaced the
-# stale-r3 fill; its 12th..18th overflow rows are ROTATION_EXEMPT with
-# part-level proofs and lead the r12 window) —
-# then the stale tiers stalest-first. Ordering only — every query stays
-# registered and locally parity-checked (tests/test_oracle_parity.py,
-# all 272). The rotation trigger is now enforced mechanically:
-# tests/test_rotation_trigger.py diffs each query's full oracle text AND
-# the transitive source of its plan function against the last
-# driver-proven snapshot (scripts/rotation_snapshot.py) and fails if a
-# changed query is outside the top-50.
-PRIORITY: tuple[str, ...] = (
-    # -- 6 queries whose REACHABLE source or oracle changed in r10
-    #    without a same-round driver re-proof: the 4 multimodal queries
-    #    (NULL-payload kernel totality + aHash oracle NULL-pixel fix;
-    #    last driver rows r5/r8/r9/r4 — verdict item #1) plus pagerank /
-    #    textrank, which the new mechanical trigger (rotation_snapshot
-    #    pointed at efa9d64→3068aa9) ALSO flags: their memoized-relation
-    #    plumbing (utils/session_cache.py LRU cap) changed in r10 --
-    "multimodal_ahash_neardup", "multimodal_decode_features",
-    "multimodal_audio_features", "multimodal_video_frame_dedup",
-    "pagerank_part_supplier", "textrank_keywords",
-    # -- round-11 probe fix (bug 27, tiny-corpus seed 419): runs-test
-    #    zero-variance guard — text change THIS round, driver re-proof
-    #    required same round --
-    "runs_test_daily_revenue",
-    # -- round-11 exact-cents revenue wave (text/plan change THIS round:
-    #    ROUND(SUM(price·(1−disc)),2) → exact-cents FLOOR half-up) --
-    "q3_top_unshipped_orders", "q5_local_supplier_volume",
-    "q6_forecast_revenue", "q10_returned_items", "q15_top_supplier",
-    "q19_disjunctive_revenue",
-    # -- round-11 probe finds (tiny-corpus seed 541): the same exact-
-    #    cents device for the two remaining product-revenue sums --
-    "q7_volume_shipping",
-    "skew_salted_join",
-    # -- round-11 hostile-input probe wave (bugs 44-45, text/oracle change
-    #    THIS round, driver re-proof required): malformed-JSON payload
-    #    convention for json_extract_props; embedding validity convention
-    #    (NULL/NaN/Inf/wrong-dim vectors dropped at load in BOTH engines)
-    #    for every embedding query not already in the window above --
-    "json_extract_props", "ann_cosine_topk", "ann_bucketed_sign_lsh",
-    "ann_recall_eval", "dedup_embedding_cosine", "knn_label_accuracy",
-    "ndcg_label_ranking", "embedding_centroid_drift",
-    "embedding_outliers_topk", "jl_projection_distortion",
-    "auc_mann_whitney_embeddings",
-    # -- round-11 empty-input probe wave (zero-row fact tables — text or
-    #    reachable-helper change THIS round, driver re-proof required):
-    #    cube/rollup grand-total convention, curation NULL fractions,
-    #    cramers ungrouped pair row, logrank reject coalesce, profile
-    #    zero-null counts, ANN/k-means empty-corpus empty results --
-    "cube_lineitem_flags", "rollup_order_counts", "corpus_curation_e2e",
-    "cramers_v_pairs", "logrank_test_retention", "profile_orders",
-    "ann_ivf_topk", "ann_pq_topk", "ann_ivfpq_topk",
-    "kmeans_embedding_clusters", "embedding_sq8_topk",
-    # -- round-11 one-row probe wave (single-row fact tables — degenerate
-    #    dof / zero-variance / zero-bin-width / empty-resample guards;
-    #    text change THIS round, driver re-proof required) --
-    "anova_f_totalprice_priority", "bootstrap_revenue_ci",
-    "corr_lineitem_moments", "nb_overdispersion_purchases",
-    "sql_drift_psi_event_values", "ks_test_purchase_view",
-    "theil_sen_price_trend", "crosscorr_daily_lags",
-    # -- round-11 proactive -0.0 / constant-series wave (the bug-42/43
-    #    classes closed family-wide; text change THIS round) --
-    "spearman_corr_daily", "sql_regression_price_trend",
-    "cuped_variance_reduction", "simpson_paradox_check",
-    "acf_daily_revenue",
-    # ---- below the driver's 50-row window: round 12's intended window
-    #      is literally the next 50 names — the spilled round-4 tail,
-    #      then the stale tiers stalest-first; the 50 rows the driver
-    #      just proved in round 10 sit at the very end ----
-    # -- round 12 MUST lead with the 18 ROTATION_EXEMPT rows of the r11
-    #    hostile-input wave: sql_zscore_normalize_events (zero-sigma NULLIF
-    #    + -0.0 normalization; result-identical at sf0.001/sf0.01, see
-    #    COVERAGE.md) and the 17 module-sibling queries whose only moved
-    #    fingerprint part is a <mutable:cache> module hash — then the 11
-    #    stale-r3 fill rows displaced by the wave --
-    "sql_zscore_normalize_events",
-    "bigram_perplexity_quality", "bigram_pmi_top", "ccnet_perplexity_buckets",
-    "dedup_canonical_pick", "dedup_cluster_assign", "dedup_lsh_recall_eval",
-    "dedup_minhash_lsh", "dedup_ngram_jaccard", "hits_hub_authority",
-    "inverted_index_postings", "mapping_resolution", "point_in_aoi_filter",
-    "split_leakage_check", "stratified_sample_langs", "tfidf_top_terms",
-    "train_test_split_assign", "zipf_alpha_terms",
-    # -- round-11 nulls wave (THIRD session; bugs 47-49): the
-    #    missing-attribute convention — rows whose consumed column is
-    #    NULL leave each computation at the point of use (Spark ASC
-    #    NULLS FIRST vs DuckDB NULLS LAST on every ordering/ranking/
-    #    chain/series), the md5 hash device coalesces NULL ids to a
-    #    sentinel (Spark concat propagates NULL, DuckDB skips it),
-    #    and range_bucketed_rank keeps NULL-key partitions via a
-    #    null-safe offsets join. All 49 ROTATION_EXEMPT with
-    #    result-identity evidence (driver fixtures carry zero NULLs;
-    #    drive_contract green at both SFs) — they lead the r12 queue
-    #    behind the hostile-wave exempt rows above; the tail past
-    #    PRIORITY[100] spills to r13 mechanically --
-    "events_sessionize_30m",
-    "session_bounce_rate",
-    "session_path_topk",
-    "markov_transition_events",
-    "markov_attribution_removal",
-    "entropy_rate_transitions",
-    "brier_next_event_model",
-    "mcnemar_bigram_vs_marginal",
-    "session_next_event_accuracy",
-    "interval_merge_sessions",
-    "allen_interval_profile",
-    "asof_purchase_last_view",
-    "sql_ewma_user_values",
-    "feature_rolling_events",
-    "ewma_control_chart_daily",
-    "change_point_cusum_events",
-    "cohort_ltv_curve",
-    "croston_demand_forecast",
-    "holt_winters_daily",
-    "open_orders_backlog_daily",
-    "repeat_purchase_interval",
-    "seasonal_decompose_weekday",
-    "seasonal_residual_anomalies",
-    "sql_monthly_revenue_ma3",
-    "collect_order_years",
-    "window_rank_running",
-    "window_balance_distribution",
-    "quantile_normalize_values",
-    "spend_percentile_by_segment",
-    "sql_equidepth_value_deciles",
-    "sql_histogram_event_values",
-    "sql_keep_first_per_key",
-    "sql_last_value_ignore_nulls",
-    "sql_ntile_balance_quartiles",
-    "sql_mode_priority_by_status",
-    "gini_split_finder_price",
-    "wasserstein_value_drift",
-    "dp_exponential_topk",
-    "dp_noisy_counts_laplace",
-    "snapshot_diff_orders",
-    "sde_name_derivation",
-    "abc_xyz_inventory_matrix",
-    "gini_revenue_concentration",
-    "join_size_estimate",
-    "lorenz_curve_deciles",
-    "pareto_abc_revenue",
-    "stratified_kfold_assign",
-    "temperature_sampled_mix",
-    "weighted_sample_docs",
-    "approx_distinct_users",
-    "sql_not_in_null_aware",
-    "sql_intersect_except_all",
-    "sql_unpivot_status_totals",
-    "repetition_quality",
-    "resample_ffill_user_6h",
-    "scd2_state_at_purchase",
-    "sql_top_customer_per_segment",
-    "sql_funnel_view_click_purchase", "sql_pii_redaction",
-    "sql_lateral_top2_orders",
-    "sql_fuzzy_name_pairs", "unigram_surprisal_quality", "windowed_heavy_hitters", "winnow_fingerprint_pairs", "anomaly_mad_events", "windowed_quantiles", "cohort_retention_users", "chisq_event_daypart",
-    "bpe_top_merges",
-    "adamic_adar_link_prediction", "entity_resolution_customers",
-    "seasonal_baseline_events", "windowed_distinct_users",
-    "token_budget_allocation", "k_anonymity_audit", "assoc_rules_events", # -- round-5 tier --
-    "rfm_customer_segments", "late_data_accounting",
-    "attribution_credit_events", "stickiness_dau_mau",
-    "dsir_importance_select", "mutual_info_status_priority",
-    "l_diversity_audit", "pagination_page_manifest",
-    "range_join_click_attribution", "sql_table_checksum_orders",
-    # -- round-6 tier --
-    "kaplan_meier_retention", "mann_kendall_trend_revenue",
-    "purchase_streaks_histogram", "item_cooccurrence_topk", "nelson_aalen_hazard", "ztest_conversion_ab",
-    "burstiness_user_interarrival", "crossdoc_ngram_dup_mass", "diff_in_diff_purchase",
-    "er_precision_recall", "t_closeness_audit",
-    "new_vs_returning_revenue", "dedup_exact_hash",
-    "cms_partkey_estimates", "hll_orderkey_cardinality", "pack_sequences_budget", "quality_filter_gopher",
-    "pagination_page_slice", "cdc_merge_orders",
-    # -- round-7 tier --
-    "dedup_containment_pairs", "grid_nearest_poi", "revenue_bridge_monthly",
-    "bh_fdr_nation_conversion", "blocking_quality_er",
-    "capture_recapture_users",
-    "doclen_log_histogram",
-    "gumbel_weekly_max_revenue", "heaps_vocab_growth", "kendall_tau_daily",
-    "lexical_diversity_by_lang",
-    "perfect_order_rate", "readability_flesch_docs",
-    "tokenizer_fertility_by_lang",
-    "vocab_coverage_estimates", "theil_index_decomposition",
-    # -- round-8 tier --
-    "bfs_hops_from_hub", "kcore_cosupplier_peel",
-    "lpa_cosupplier_communities", "modularity_cosupplier",
-    "assortativity_cosupplier", "jaccard_link_prediction",
-    "triangle_cosupplier_stats", "agg_success_rate", "bbox_range_filter", "doc_fingerprints",
-    "exists_big_quantity_orders", "lang_id_confusion",
-    "mapping_validation_violations",
-    "naming_sanitize_chain", "profile_orders_columns",
-    "scalar_subquery_above_avg", "simhash_fingerprints", "source_fc_reverse_match",
-    "text_quality_scores", "token_stats",
-    "top_tokens_per_lang", "unique_name_allocation", "url_parse_extract", "wgs84_sniff_rule",
-    "anti_join_missing", "bloom_supplier_prune",
-    "distinct_dedupe", "events_sliding_30m15m", "events_tumbling_1h",
-    "grouping_sets_status_priority", "hll_intersect_cohorts",
-    "hll_orders_by_flag",
-    # -- round-9 tier --
-    "sql_entropy_event_types",
-    "expectations_violation_counts", "dedup_chunk_exact", "funnel_latency_quantiles", "nb_lang_classifier_eval", "novelty_rate_docs", "agg_metrics_summary",
-    "forecast_backtest_mape", "quantile_sketch_values",
-    "q4_order_priority_check", "q8_market_share",
-    "q12_priority_class_counts", "q13_customer_distribution",
-    "q17_small_quantity_revenue", "q18_large_volume_customers",
-    "q21_waiting_supplier", "q22_idle_balance_by_country",
-    "lead_lag_order_gaps",
-    # -- round-10 window (driver-proven in CORRECTNESS_r10, freshest) --
-    "q1_pricing_summary", "lookup_enrich_customers",
-    "sql_conditional_agg_filter",
-    "benford_first_digit",
-    "pattern_vshape_prices", "price_elasticity_loglog",
-    "q2_min_cost_supplier", "q9_product_type_profit", "q11_important_stock",
-    "q16_supplier_part_buckets", "q20_excess_stock_suppliers",
-    "effective_catalog_size", "regression_detect_metrics", "price_index_laspeyres",
-    "q14_promo_revenue_share",
-    "target_encode_priority", "hhi_segment_concentration",
-    "percentile_event_values", "pivot_orders_status",
-    "profile_approx_orders",
-    "semi_join_include_filter", "set_ops_union_except",
-    "window_range_trailing_spend", "sql_correlated_scalar_count", "bm25_keyword_topk", "cms_heavy_hitters", "decontaminate_eval_overlap", "dedup_simhash_hamming",
-    "doc_chunk_overlap", "incremental_agg_orders", "key_skew_partkey",
-    "keyword_and_search", "sql_outlier_iqr_fences",
-)
-
-
-def _export_order() -> list[str]:
-    _ensure_loaded()
-    unknown = [n for n in PRIORITY if n not in REGISTRY]
-    if unknown:
-        # a typo here would silently demote a query out of the driver's
-        # first-50 correctness window — fail loudly instead
-        raise ValueError(f"PRIORITY names not in registry: {unknown}")
-    rest = [n for n in REGISTRY if n not in set(PRIORITY)]
-    return list(PRIORITY) + rest
-
-
 def all_queries() -> dict[str, SparkQuery]:
-    return {n: REGISTRY[n].spark_fn for n in _export_order()}
+    """Every registered query, in registration order (plan-module import order)."""
+    _ensure_loaded()
+    return {n: s.spark_fn for n, s in REGISTRY.items()}
 
 
 def all_oracles() -> dict[str, str]:
-    return {
-        n: REGISTRY[n].oracle for n in _export_order() if REGISTRY[n].oracle is not None
-    }
+    _ensure_loaded()
+    return {n: s.oracle for n, s in REGISTRY.items() if s.oracle is not None}
 
 
 _LOADED = False

@@ -22,13 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.star import TABLES, load_table
-from etl_pipeline_spark.utils.session_cache import register_cache, session_key
-
-# Per-(session, table): the sf_dir this session's temp view of that table
-# points at. A query registers only the tables its SQL names, and skips
-# any whose view already points at the right dataset; a table read from
-# another sf_dir is re-pointed (createOrReplaceTempView).
-_VIEWS_MEMO: dict = register_cache({})
 
 # A star table is referenced when its name appears as a word of the SQL
 # text. Over-matching (a name in a comment) only registers a spare view.
@@ -36,12 +29,13 @@ _TABLE_WORD = re.compile(r"\b(?:" + "|".join(TABLES) + r")\b", re.IGNORECASE)
 
 
 def register_views(spark: SparkSession, sf_dir: str, sql: str) -> None:
-    """Expose the star-schema tables ``sql`` names as temp views."""
-    sid = session_key(spark)
+    """Point a temp view at ``sf_dir`` for each star table ``sql`` names.
+
+    Registered on every call: a caller may have replaced any of these views
+    with its own frame since the last query, and ``load_table`` is memoized.
+    """
     for name in sorted({w.lower() for w in _TABLE_WORD.findall(sql)}):
-        if _VIEWS_MEMO.get((sid, name)) != sf_dir:
-            load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-            _VIEWS_MEMO[(sid, name)] = sf_dir
+        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def _sql_query(name: str, sql: str, doc: str, tags: tuple[str, ...]):

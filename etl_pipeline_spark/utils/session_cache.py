@@ -6,10 +6,14 @@ dataset) — the shingle table (plans/llm.py), the co-supplier edge set
 The memo is the honest production shape (an index is built once and
 queried many times), but it needs two disciplines this module centralizes:
 
-- **Keying**: ``spark.sparkContext.applicationId`` — a stable per-session
-  identity. Keying on ``id(spark)`` is unsound: after a session is
-  stopped and GC'd, a NEW SparkSession can reuse the same CPython id and
-  resurrect persisted DataFrames bound to the dead context.
+- **Keying**: ``session_key`` is ``"<applicationId>/<sessionUUID>"`` — a
+  stable identity of one SparkSession. Sessions that share a SparkContext
+  (``spark.newSession()``) have separate catalogs, so they must not share
+  entries: a memo hit in the wrong session skips work (a temp view, a
+  registration) that only happened in the other one. Keying on
+  ``id(spark)`` is unsound: after a session is stopped and GC'd, a NEW
+  SparkSession can reuse the same CPython id and resurrect persisted
+  DataFrames bound to the dead context.
 - **Eviction**: ``clear_caches(spark)`` unpersists everything a session's
   memos pinned and drops the entries. Bench/driver runs are short-lived
   and never need it; a long-lived service calls it between workloads so
@@ -17,20 +21,20 @@ queried many times), but it needs two disciplines this module centralizes:
   ``pipeline.Pipeline.run`` calls it on exit (finally), so a service
   that drives workloads through the pipeline never has to — only callers
   invoking plan functions directly across many sessions own the call.
-  Entries keyed by a stopped session's applicationId hold only dead
+  Entries keyed by a stopped session hold only dead
   driver-side references (their blocks died with the session); they are
   reclaimed by the next ``clear_caches()`` (no-arg), by the
-  LRU-of-applications cap below, or by the atexit sweep.
+  LRU-of-sessions cap below, or by the atexit sweep.
 
 A process that drives plan functions directly across MANY sessions and
 never calls ``clear_caches`` would still accumulate one key set per
-applicationId (dead driver-side references — cheap, but unbounded), so
-``memoized_relation`` additionally keeps an LRU of applicationIds capped
-at ``_MAX_APPS``: touching a relation under a NEW application evicts the
-entries of the least-recently-used application beyond the cap. Evicting
-a still-live application is correctness-neutral — ``build()`` is pure,
-so its next touch just rebuilds — and ``_MAX_APPS`` concurrent Spark
-applications in one driver process is already far beyond real use. An
+session (dead driver-side references — cheap, but unbounded), so
+``memoized_relation`` additionally keeps an LRU of session keys capped
+at ``_MAX_APPS``: touching a relation under a NEW session evicts the
+entries of the least-recently-used session beyond the cap. Evicting
+a still-live session is correctness-neutral — ``build()`` is pure,
+so its next touch just rebuilds — and ``_MAX_APPS`` concurrently
+memoizing sessions in one driver process is already beyond real use. An
 ``atexit`` hook runs ``clear_caches()`` so interpreter shutdown releases
 whatever remains without relying on session GC order.
 """
@@ -45,7 +49,7 @@ from pyspark.sql import DataFrame, SparkSession
 # every memo dict registers here so clear_caches can reach it
 _CACHES: list[dict] = []
 
-# recency-ordered applicationIds with live memo entries (last = newest);
+# recency-ordered session keys with live memo entries (last = newest);
 # a plain dict preserves insertion order, re-insertion refreshes recency
 _APP_LRU: dict[str, None] = {}
 _MAX_APPS = 4
@@ -63,8 +67,11 @@ def register_cache(cache: dict) -> dict:
 
 
 def session_key(spark: SparkSession) -> str:
-    """Stable identity for this session's cache entries."""
-    return spark.sparkContext.applicationId
+    """Stable identity for this session's cache entries.
+
+    The applicationId alone is shared by every ``newSession()`` of one
+    context; the session UUID tells those sessions apart."""
+    return f"{spark.sparkContext.applicationId}/{spark._jsparkSession.sessionUUID()}"
 
 
 def memoized_relation(cache: dict, spark: SparkSession, extra_key: tuple, build) -> DataFrame:

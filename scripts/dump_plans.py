@@ -1,10 +1,13 @@
 """Dump .explain("formatted") for registered queries without running them.
 
-Usage: PLAN_DIR=plans/r12 [PLAN_SUFFIX=_after] python scripts/dump_plans.py q1 q2 ...
+Usage: [PLAN_DIR=plans/dump] [PLAN_SUFFIX=_after] python scripts/dump_plans.py q1 q2 ...
   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
 
-Planning only — no actions besides parquet schema inference, so it is safe
-to run next to timed captures.
+PLAN_DIR defaults to ``plans/dump`` under the repo root and is created if
+missing; ``plans/`` is git-ignored, so dumps stay local scratch.
+
+Planning only — no actions besides the checkpoints some plan functions
+fire while they build, so it is safe to run next to timed captures.
 """
 
 from __future__ import annotations
@@ -12,7 +15,8 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, _REPO)
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
 from etl_pipeline_spark.session import get_spark
@@ -20,7 +24,7 @@ from etl_pipeline_spark.session import get_spark
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    plan_dir = os.environ["PLAN_DIR"]
+    plan_dir = os.environ.get("PLAN_DIR", os.path.join(_REPO, "plans", "dump"))
     suffix = os.environ.get("PLAN_SUFFIX", "")
     os.makedirs(plan_dir, exist_ok=True)
     spark = get_spark(app_name="dump-plans")

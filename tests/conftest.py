@@ -5,6 +5,8 @@ insensitive value comparison)."""
 from __future__ import annotations
 
 import os
+import time
+import uuid
 
 import duckdb
 import pandas as pd
@@ -62,3 +64,32 @@ def assert_oracle_match(spark_df, duck_con, oracle: str, name: str = "query") ->
     pd.testing.assert_frame_equal(
         actual, expected, check_dtype=False, check_exact=True, obj=name
     )
+
+
+def _in_job_group(spark, group: str, action) -> None:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+
+
+def assert_fires_no_job(spark, action, control_parquet: str) -> None:
+    """Run ``action`` in its own job group and assert ``statusTracker``
+    lists no job for it.
+
+    Control: a bare inference read of ``control_parquet`` in a later group
+    does fire a job; once the status store shows it, every job of the
+    earlier group is listed too."""
+    tracker = spark.sparkContext.statusTracker()
+    quiet, control = f"quiet-{uuid.uuid4().hex}", f"infer-{uuid.uuid4().hex}"
+    _in_job_group(spark, quiet, action)
+    _in_job_group(spark, control, lambda: spark.read.parquet(control_parquet))
+    deadline = time.monotonic() + 30
+    while not tracker.getJobIdsForGroup(control) and time.monotonic() < deadline:
+        time.sleep(0.05)
+    assert tracker.getJobIdsForGroup(control), "inference job never reached the status store"
+    assert list(tracker.getJobIdsForGroup(quiet)) == []

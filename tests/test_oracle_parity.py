@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
+from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded, all_oracles, all_queries
 from tests.conftest import SF_DIR, assert_oracle_match
 
 _ensure_loaded()
@@ -28,6 +28,13 @@ def test_entry_smoke(spark):
     rows = out.collect()
     assert len(rows) > 0
     assert set(e.oracle_sql()).issubset(set(e.queries()))
+
+
+def test_export_is_the_registry_in_its_own_order():
+    assert list(all_queries()) == list(REGISTRY)
+    assert list(all_oracles().items()) == [
+        (n, s.oracle) for n, s in REGISTRY.items() if s.oracle is not None
+    ]
 
 
 def test_approx_distinct_accuracy(spark, duck):

@@ -5,6 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from etl_pipeline_spark.plans.registry import REGISTRY
 from etl_pipeline_spark.utils.session_cache import (
     clear_caches,
     register_cache,
@@ -14,9 +15,24 @@ from tests.conftest import SF_DIR
 
 
 def test_session_key_is_application_id(spark):
-    # applicationId is stable across the session and never reused by a
-    # later session in the same process (unlike id(spark))
-    assert session_key(spark) == spark.sparkContext.applicationId
+    # the applicationId (never reused by a later context in the same
+    # process, unlike id(spark)) plus the session UUID, which tells apart
+    # the sessions of one context
+    key = session_key(spark)
+    assert key == f"{spark.sparkContext.applicationId}/{spark._jsparkSession.sessionUUID()}"
+    assert session_key(spark) == key
+    other = spark.newSession()
+    assert session_key(other).startswith(f"{spark.sparkContext.applicationId}/")
+    assert session_key(other) != key
+
+
+def test_sql_query_runs_in_a_new_session_of_the_same_context(spark):
+    """Each session has its own temp views, so a memo entry made in one
+    session must not let a query in another skip its view registration."""
+    fn = REGISTRY["sql_keep_first_per_key"].spark_fn
+    want = sorted(fn(spark, SF_DIR).collect())
+    assert want
+    assert sorted(fn(spark.newSession(), SF_DIR).collect()) == want
 
 
 def test_clear_caches_unpersists_and_evicts(spark):

@@ -13,6 +13,7 @@ from etl_pipeline_spark.operators.similarity import (
     train_pq_codebooks,
 )
 from etl_pipeline_spark.sources.star import load_table
+from tests.conftest import assert_fires_no_job
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -143,6 +144,22 @@ def test_persisted_ivfpq_index_roundtrip_and_pruning(spark, emb, tmp_path):
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     )
     assert "PartitionFilters: [cell" in plan  # probed-cells IN filter pushed to listing
+
+
+def test_persisted_index_quantizer_reads_fire_no_job(spark, emb, tmp_path):
+    """The pivots and codebook of a saved IVF-PQ index load with their
+    footer schemas: neither read fires a schema-inference job."""
+    from etl_pipeline_spark.operators.similarity import _read_index_part, build_ivfpq_index
+
+    path = str(tmp_path / "ivfpq_index")
+    build_ivfpq_index(emb, path, ncells=4, m=4, ksub=8, sample_limit=512)
+    assert_fires_no_job(
+        spark,
+        lambda: [_read_index_part(spark, path, p) for p in ("pivots", "codebook")],
+        f"{path}/pivots",
+    )
+    for p in ("pivots", "codebook"):
+        assert _read_index_part(spark, path, p).schema == spark.read.parquet(f"{path}/{p}").schema
 
 
 def test_ivfpq_encode_survives_zero_norm_corpus_vector(spark, tmp_path):

@@ -12,8 +12,6 @@ in each `ts` encoding the generator has shipped.
 from __future__ import annotations
 
 import os
-import time
-import uuid
 from urllib.parse import urlparse
 
 import pyarrow as pa
@@ -21,9 +19,9 @@ import pyarrow.parquet as pq
 import pytest
 
 from etl_pipeline_spark.plans import sql_surface
+from etl_pipeline_spark.plans.registry import REGISTRY
 from etl_pipeline_spark.sources.star import TABLES, load_table, parquet_schema
-from etl_pipeline_spark.utils.session_cache import session_key
-from tests.conftest import SF_DIR
+from tests.conftest import SF_DIR, assert_fires_no_job, assert_oracle_match
 
 TESTDATA = os.path.dirname(SF_DIR)
 SCALES = ("sf0.001", "sf0.01", "sf0.1")
@@ -171,41 +169,21 @@ def test_empty_directory_has_no_footer(tmp_path):
         parquet_schema(str(tmp_path))
 
 
-def _in_job_group(spark, group: str, action) -> None:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc.setLocalProperty("spark.job.interruptOnCancel", None)
-
-
 def test_load_table_fires_no_spark_job(spark, tmp_path):
     # a path this session has never read, so the table memo misses
     sf = str(tmp_path / "sf")
     os.symlink(f"{TESTDATA}/sf0.001", sf)
-    tracker = spark.sparkContext.statusTracker()
-    quiet, control = f"catalog-{uuid.uuid4().hex}", f"infer-{uuid.uuid4().hex}"
-    _in_job_group(spark, quiet, lambda: [load_table(spark, sf, t, validate=True) for t in TABLES])
-    # control: an inference read in a later group does fire a job; once the
-    # status store shows it, every job of the earlier group is listed too
-    _in_job_group(spark, control, lambda: spark.read.parquet(f"{sf}/orders.parquet"))
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(control) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(control), "inference job never reached the status store"
-    assert list(tracker.getJobIdsForGroup(quiet)) == []
+    assert_fires_no_job(
+        spark,
+        lambda: [load_table(spark, sf, t, validate=True) for t in TABLES],
+        f"{sf}/orders.parquet",
+    )
 
 
 def test_register_views_only_referenced_tables_and_repoints(spark):
-    sid = session_key(spark)
-
     def reset():
         for t in TABLES:
             spark.catalog.dropTempView(t)
-            sql_surface._VIEWS_MEMO.pop((sid, t), None)
 
     def view_dir(t):
         (f,) = spark.table(t).inputFiles()
@@ -227,3 +205,14 @@ def test_register_views_only_referenced_tables_and_repoints(spark):
             assert n == pq.read_metadata(f"{sf}/lineitem.parquet").num_rows
     finally:
         reset()
+
+
+def test_sql_query_repoints_a_view_a_caller_replaced(spark, duck):
+    """A caller may replace a star temp view with its own frame between
+    two SQL queries; the next query must still read the star table."""
+    spec = REGISTRY["sql_keep_first_per_key"]
+    spec.spark_fn(spark, SF_DIR).collect()
+    spark.createDataFrame(
+        [(1, 1, 9.99, None)], "o_orderkey int, o_custkey int, o_totalprice double, o_orderdate date"
+    ).createOrReplaceTempView("orders")
+    assert_oracle_match(spec.spark_fn(spark, SF_DIR), duck, spec.oracle, spec.name)
