@@ -1,11 +1,20 @@
-"""Geospatial kernel (SURVEY.md §2.3 T1/T2) — pure NumPy, Arrow-vectorized.
+"""Geospatial kernel (SURVEY.md §2.3 T1/T2): reprojection as Spark SQL
+math, clipping as a range predicate or an Arrow-vectorized pandas UDF.
 
 The reference delegates clip + reprojection to ArcGIS
 (PairwiseClip/Project, etl/handlers/geoprocess.py:13-98). Neither Sedona nor
 pyproj/shapely is available in this container, so the kernel is implemented
 from the public Gauss–Krüger series (Krüger 1912; series form as in Karney,
-"Transverse Mercator with an accuracy of a few nanometers", J. Geod. 2011)
-over NumPy arrays inside `pandas_udf`s — Arrow batches, no per-row Python.
+"Transverse Mercator with an accuracy of a few nanometers", J. Geod. 2011).
+
+Reprojection (T2): the series is written once, over a small math namespace,
+and evaluated two ways. `reproject` renders it as Spark SQL text — one
+expression per output column and per shared intermediate (`sin`, `atanh`,
+`sinh`, `atan2`, …, constants as exact double literals) — so a load runs
+entirely in the JVM: no Python worker, no Arrow round trip.
+`tm_forward`/`tm_inverse` evaluate the same formula over NumPy arrays; tests
+pin the two evaluators equal to within the rounding of the JVM's and libm's
+transcendental functions.
 
 Supported CRS: geographic SWEREF99/WGS84-like (EPSG:4326 semantics) and any
 transverse-Mercator projection of GRS80, preconfigured for the reference's
@@ -26,6 +35,8 @@ shuffle; the AOI bbox broadcasts as four scalars.
 
 from __future__ import annotations
 
+import math
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -34,8 +45,8 @@ from pyspark.sql.types import DoubleType, StringType, StructField, StructType
 
 from etl_pipeline_spark.utils.udfpickle import pickle_module_by_value
 
-# the TM/clip kernels below run inside pandas UDFs on executors — ship them
-# by value so workers never need this package importable
+# the clip and point-in-polygon kernels below run inside pandas UDFs on
+# executors — ship them by value so workers never need this package importable
 pickle_module_by_value(__name__)
 
 # GRS80 ellipsoid
@@ -70,10 +81,138 @@ def _series_constants():
 # two TM singular points (λ=±90°, φ=0); past |η|≈2.5 the 3rd-order series
 # returns plausible-looking but degree-level-wrong coordinates (measured:
 # η=2.0 → 2e-4°, η=3.1 → 1.6°, η=4.7 → astronomically-large finite
-# eastings that don't round-trip at all). Outputs there are NaN —
-# explicitly undefined beats silently wrong. Every configured zone sits at
-# |η| < 0.2; fuzz-pinned in tests/test_engine_fuzz.py.
+# eastings that don't round-trip at all). Outputs there are undefined
+# (NaN in NumPy, NULL in SQL) — explicitly undefined beats silently
+# wrong. Every configured zone sits at |η| < 0.2; fuzz-pinned in
+# tests/test_engine_fuzz.py.
 _ETA_MAX = 2.5
+_RAD = math.pi / 180.0
+_DEG = 180.0 / math.pi
+
+
+def _tm_forward_series(m, lon, lat, epsg: int):
+    """Geographic → TM, written over the math namespace ``m`` (a
+    ``_NumpyMath`` or a ``_SqlMath``): Python arithmetic on the operands is
+    the series' arithmetic in both evaluators, in the same order."""
+    lon0, k0, fe, fn_ = TM_PARAMS[epsg]
+    n, big_a, alpha, _ = _series_constants()
+    s = 2.0 * math.sqrt(n) / (1.0 + n)
+    lam = (lon - lon0) * _RAD
+    sin_phi = m.sin(lat * _RAD)
+    t = m.sinh(m.atanh(sin_phi) - s * m.atanh(s * sin_phi))
+    xi, eta = m.bind(m.atan2(t, m.cos(lam)), m.atanh(m.sin(lam) / m.sqrt(1.0 + t * t)))
+    x, y = eta, xi
+    for j, a_j in enumerate(alpha, start=1):
+        y = y + a_j * m.sin(2.0 * j * xi) * m.cosh(2.0 * j * eta)
+        x = x + a_j * m.cos(2.0 * j * xi) * m.sinh(2.0 * j * eta)
+    # NaN η (exactly at the singular points) fails the test too
+    ok = m.abs(eta) <= _ETA_MAX
+    return m.where(ok, fe + k0 * big_a * x), m.where(ok, fn_ + k0 * big_a * y)
+
+
+def _tm_inverse_series(m, e, n_coord, epsg: int):
+    """TM → geographic over the math namespace ``m``; see
+    ``_tm_forward_series``."""
+    lon0, k0, fe, fn_ = TM_PARAMS[epsg]
+    n, big_a, _, beta = _series_constants()
+    s = 2.0 * math.sqrt(n) / (1.0 + n)
+    xi = (n_coord - fn_) / (k0 * big_a)
+    eta = (e - fe) / (k0 * big_a)
+    xi_p, eta_p = xi, eta
+    for j, b_j in enumerate(beta, start=1):
+        xi_p = xi_p - b_j * m.sin(2.0 * j * xi) * m.cosh(2.0 * j * eta)
+        eta_p = eta_p - b_j * m.cos(2.0 * j * xi) * m.sinh(2.0 * j * eta)
+    xi_p, eta_p = m.bind(xi_p, eta_p)
+    # sin χ of the conformal latitude χ; |sin ξ'| ≤ 1 ≤ cosh η', so the
+    # rounded quotient needs no clamping into [-1, 1]
+    sin_chi = m.sin(xi_p) / m.cosh(eta_p)
+    # conformal → geodetic latitude by fixed-point iteration on
+    # atanh(sinφ) = atanh(sinχ) + s·atanh(s·sinφ) — converges to machine
+    # precision (the truncated δ-series left ~6e-9° of error)
+    sin_phi = sin_chi
+    for _ in range(8):
+        sin_phi = m.tanh(m.atanh(sin_chi) + s * m.atanh(s * sin_phi))
+    phi = m.asin(sin_phi)  # |tanh| ≤ 1
+    lam = m.atan2(m.sinh(eta_p), m.cos(xi_p))
+    # forward x = η + Σ αj·sinh(2jη)·cos(2jξ) ≤ η + 0.07 at η = 2.5, so
+    # 2.6 keeps every in-domain forward output invertible
+    ok = m.abs(eta) <= _ETA_MAX + 0.1
+    return m.where(ok, lon0 + lam * _DEG), m.where(ok, phi * _DEG)
+
+
+class _NumpyMath:
+    """The series' math namespace over float64 arrays; masked → NaN."""
+
+    sin, cos, sinh, cosh, tanh = np.sin, np.cos, np.sinh, np.cosh, np.tanh
+    atanh, asin, atan2, sqrt, abs = np.arctanh, np.arcsin, np.arctan2, np.sqrt, np.abs
+
+    @staticmethod
+    def bind(*values):
+        return values
+
+    @staticmethod
+    def where(ok, v):
+        return np.where(ok, v, np.nan)
+
+
+class _Sql:
+    """Spark SQL text of a DOUBLE expression. Python arithmetic and ``<=``
+    on it build SQL; a float operand becomes an exact double literal."""
+
+    __slots__ = ("text",)
+
+    def __init__(self, text: str):
+        self.text = text
+
+    @staticmethod
+    def lit(v) -> str:
+        return v.text if isinstance(v, _Sql) else repr(float(v)) + "D"
+
+    def _op(self, op: str, other, reflected: bool = False) -> _Sql:
+        a, b = (_Sql.lit(other), self.text) if reflected else (self.text, _Sql.lit(other))
+        return _Sql(f"({a} {op} {b})")
+
+    def __add__(self, o): return self._op("+", o)
+    def __radd__(self, o): return self._op("+", o, True)
+    def __sub__(self, o): return self._op("-", o)
+    def __rsub__(self, o): return self._op("-", o, True)
+    def __mul__(self, o): return self._op("*", o)
+    def __rmul__(self, o): return self._op("*", o, True)
+    def __truediv__(self, o): return self._op("/", o)
+    def __rtruediv__(self, o): return self._op("/", o, True)
+    def __le__(self, o): return self._op("<=", o)
+
+
+def _sql_fn(name: str):
+    return staticmethod(lambda *args: _Sql(f"{name}({', '.join(map(_Sql.lit, args))})"))
+
+
+class _SqlMath:
+    """The series' math namespace as Spark SQL; masked → NULL.
+
+    ``bind`` turns values the series uses many times into columns of their
+    own projection (``stages``, in order), so each output column's text
+    names them instead of repeating their text: smaller trees for Catalyst
+    to analyze and optimize, and no copy of a value hidden from
+    common-subexpression elimination."""
+
+    sin, cos, sinh, cosh, tanh = map(_sql_fn, ("sin", "cos", "sinh", "cosh", "tanh"))
+    atanh, asin, atan2, sqrt, abs = map(_sql_fn, ("atanh", "asin", "atan2", "sqrt", "abs"))
+
+    def __init__(self):
+        self.stages: list[list[tuple[str, str]]] = []
+
+    def bind(self, *values: _Sql) -> tuple[_Sql, ...]:
+        stage = [(f"__tm_{len(self.stages)}_{i}", v.text) for i, v in enumerate(values)]
+        self.stages.append(stage)
+        return tuple(_Sql(f"`{name}`") for name, _ in stage)
+
+    @staticmethod
+    def where(ok: _Sql, v: _Sql) -> _Sql:
+        # v × (1 or NULL), not CASE … THEN v: common-subexpression
+        # elimination skips conditional branches, and v shares its terms
+        # with the test and the other output column
+        return _Sql(f"({v.text} * CASE WHEN {ok.text} THEN 1.0D END)")
 
 
 def tm_forward(lon_deg: np.ndarray, lat_deg: np.ndarray, epsg: int):
@@ -82,24 +221,11 @@ def tm_forward(lon_deg: np.ndarray, lat_deg: np.ndarray, epsg: int):
     Defined for |η(λ, φ)| ≤ 2.5 (~±60° of longitude from the central
     meridian at the equator, wider at higher latitude, poles included);
     outside that, both outputs are NaN (see ``_ETA_MAX``)."""
-    lon0, k0, fe, fn_ = TM_PARAMS[epsg]
-    n, big_a, alpha, _ = _series_constants()
-    lam = np.radians(np.asarray(lon_deg, dtype=np.float64) - lon0)
-    phi = np.radians(np.asarray(lat_deg, dtype=np.float64))
-    s = 2.0 * np.sqrt(n) / (1.0 + n)
     with np.errstate(all="ignore"):
-        t = np.sinh(np.arctanh(np.sin(phi)) - s * np.arctanh(s * np.sin(phi)))
-        xi = np.arctan2(t, np.cos(lam))
-        eta = np.arctanh(np.sin(lam) / np.sqrt(1.0 + t * t))
-        x, y = eta.copy(), xi.copy()
-        for j, a_j in enumerate(alpha, start=1):
-            y = y + a_j * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-            x = x + a_j * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-        # ~ on <= keeps NaN η (exactly at the singular points) masked too
-        bad = ~(np.abs(eta) <= _ETA_MAX)
-        x = np.where(bad, np.nan, x)
-        y = np.where(bad, np.nan, y)
-    return fe + k0 * big_a * x, fn_ + k0 * big_a * y
+        return _tm_forward_series(
+            _NumpyMath, np.asarray(lon_deg, dtype=np.float64),
+            np.asarray(lat_deg, dtype=np.float64), epsg,
+        )
 
 
 def tm_inverse(e: np.ndarray, n_coord: np.ndarray, epsg: int):
@@ -108,32 +234,11 @@ def tm_inverse(e: np.ndarray, n_coord: np.ndarray, epsg: int):
     Eastings beyond the forward map's domain image (scaled |η| > ~2.6,
     i.e. ≳16,600 km from the central meridian — nothing tm_forward can
     emit) → NaN, mirroring the forward-side domain mask."""
-    lon0, k0, fe, fn_ = TM_PARAMS[epsg]
-    n, big_a, _, beta = _series_constants()
-    xi = (np.asarray(n_coord, dtype=np.float64) - fn_) / (k0 * big_a)
-    eta = (np.asarray(e, dtype=np.float64) - fe) / (k0 * big_a)
-    # forward x = η + Σ αj·sinh(2jη)·cos(2jξ) ≤ η + 0.07 at η = 2.5, so
-    # 2.6 keeps every in-domain forward output invertible
-    bad = ~(np.abs(eta) <= _ETA_MAX + 0.1)
     with np.errstate(all="ignore"):
-        xi_p, eta_p = xi.copy(), eta.copy()
-        for j, b_j in enumerate(beta, start=1):
-            xi_p = xi_p - b_j * np.sin(2.0 * j * xi) * np.cosh(2.0 * j * eta)
-            eta_p = eta_p - b_j * np.cos(2.0 * j * xi) * np.sinh(2.0 * j * eta)
-        chi = np.arcsin(np.clip(np.sin(xi_p) / np.cosh(eta_p), -1.0, 1.0))
-        # conformal → geodetic latitude by fixed-point iteration on
-        # atanh(sinφ) = atanh(sinχ) + s·atanh(s·sinφ) — converges to machine
-        # precision (the truncated δ-series left ~6e-9° of error)
-        s = 2.0 * np.sqrt(n) / (1.0 + n)
-        sin_chi = np.sin(chi)
-        sin_phi = sin_chi.copy()
-        for _ in range(8):
-            sin_phi = np.tanh(np.arctanh(sin_chi) + s * np.arctanh(s * sin_phi))
-        phi = np.arcsin(np.clip(sin_phi, -1.0, 1.0))
-        lam = np.arctan2(np.sinh(eta_p), np.cos(xi_p))
-        lam = np.where(bad, np.nan, lam)
-        phi = np.where(bad, np.nan, phi)
-    return lon0 + np.degrees(lam), np.degrees(phi)
+        return _tm_inverse_series(
+            _NumpyMath, np.asarray(e, dtype=np.float64),
+            np.asarray(n_coord, dtype=np.float64), epsg,
+        )
 
 
 def _parse_epsg(crs: str | int) -> int:
@@ -143,10 +248,19 @@ def _parse_epsg(crs: str | int) -> int:
     return int(m)
 
 
+def _sql_column(name: str) -> _Sql:
+    quoted = name.replace("`", "``")
+    return _Sql(f"CAST(`{quoted}` AS DOUBLE)")
+
+
 def reproject(df: DataFrame, x: str, y: str, src: str | int, dst: str | int,
               out_x: str = "x_out", out_y: str = "y_out") -> DataFrame:
     """T2: add reprojected coordinate columns. 4326↔{3006,3010,3011} and
-    TM↔TM (via geographic) — vectorized NumPy inside one Arrow batch UDF."""
+    TM↔TM (via geographic), as Spark SQL math evaluated in the JVM: one
+    projection per ``_SqlMath.bind`` stage, then one for the outputs.
+
+    A NULL input, a point outside the series' domain (``_ETA_MAX``) or a
+    NaN result gives NULL in the output."""
     s, d = _parse_epsg(src), _parse_epsg(dst)
     if s == d:
         return df.withColumn(out_x, F.col(x)).withColumn(out_y, F.col(y))
@@ -154,21 +268,21 @@ def reproject(df: DataFrame, x: str, y: str, src: str | int, dst: str | int,
         if code != 4326 and code not in TM_PARAMS:
             raise ValueError(f"unsupported CRS EPSG:{code}; known: 4326, {sorted(TM_PARAMS)}")
 
-    result_schema = StructType(
-        [StructField(out_x, DoubleType()), StructField(out_y, DoubleType())]
+    m = _SqlMath()
+    vx, vy = _sql_column(x), _sql_column(y)
+    if s != 4326:
+        vx, vy = _tm_inverse_series(m, vx, vy, s)
+    if d != 4326:
+        vx, vy = _tm_forward_series(m, vx, vy, d)
+    out = df
+    for stage in m.stages:
+        out = out.select("*", *(F.expr(text).alias(name) for name, text in stage))
+    out = out.select(
+        "*",
+        F.expr(f"nanvl({vx.text}, CAST(NULL AS DOUBLE))").alias(out_x),
+        F.expr(f"nanvl({vy.text}, CAST(NULL AS DOUBLE))").alias(out_y),
     )
-
-    @F.pandas_udf(result_schema)
-    def _tx(xs: pd.Series, ys: pd.Series) -> pd.DataFrame:
-        xv, yv = xs.to_numpy(np.float64), ys.to_numpy(np.float64)
-        if s != 4326:
-            xv, yv = tm_inverse(xv, yv, s)
-        if d != 4326:
-            xv, yv = tm_forward(xv, yv, d)
-        return pd.DataFrame({out_x: xv, out_y: yv})
-
-    packed = df.withColumn("_prj", _tx(F.col(x), F.col(y)))
-    return packed.select("*", f"_prj.{out_x}", f"_prj.{out_y}").drop("_prj")
+    return out.drop(*(name for stage in m.stages for name, _ in stage))
 
 
 def bbox_filter(df: DataFrame, x: str, y: str,

@@ -17,7 +17,11 @@ Reference lifecycle: cleanup → download → stage → geoprocess → SDE load
 
 The transform phase applies, when configured: bbox clip (points: pushed
 range predicate; polygons: exact Sutherland–Hodgman), reprojection
-(EPSG:4326→3006 by default), and fc-name generation via the naming kernel.
+(EPSG:4326→3006 by default, Spark SQL math), and fc-name generation via the
+naming kernel. A point source's load is therefore one job that runs only in
+the JVM (a JSON source adds its schema-inference job at stage); the sink
+counts the rows it writes inside that job, and the run records them per
+feature class in ``RunSummary.rows_out``.
 """
 
 from __future__ import annotations
@@ -167,7 +171,8 @@ class Pipeline:
                     try:
                         with PhaseTimer(self.summary, "load", f"{src.name}/{name}"):
                             fc, out = self.transform(src, name, df)
-                            self.load(fc, out)
+                            report = self.load(fc, out)
+                        self.summary.rows_out[(src.name, fc)] = report.rows
                     except Exception:
                         # per-FC containment: one bad feature class doesn't
                         # kill the source (recovery-manager semantics)

@@ -15,6 +15,10 @@ Reference strategy dispatch (etl/pipeline.py:672-745):
 - Pre-load validation (:633-651) → count + schema assertion returning a
   ``LoadReport`` instead of log lines.
 
+Row counts: every sink counts the rows it writes with one ``Observation``
+on the written frame, so ``LoadReport.rows`` comes out of the write job
+itself — no second job re-reads (and re-parses, re-clips) the source.
+
 Scale notes: all writes accept ``partition_by`` so production tables land
 partitioned (partition pruning on read); appends go through
 ``insertInto``-style positional resolution only after an explicit
@@ -25,7 +29,8 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 @dataclass(frozen=True)
@@ -55,6 +60,13 @@ def validate_before_load(df: DataFrame, expected_columns: set[str] | None = None
     return df.count()
 
 
+def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with an observation that counts the rows passing through it;
+    read ``obs.get["rows"]`` once the action that runs it is done."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
+
+
 def _require_database(spark: SparkSession, table: str) -> None:
     """K5: refuse to create a missing namespace (reference refuses missing
     SDE datasets and points at the provisioning script instead)."""
@@ -79,23 +91,26 @@ def truncate_and_load(
         missing = set(target_cols) - set(df.columns)
         if missing:
             raise ValueError(f"truncate_and_load into {table}: df missing {sorted(missing)}")
-        df.select(*target_cols).write.insertInto(table, overwrite=True)
+        counted, obs = _counted(df.select(*target_cols))
+        counted.write.insertInto(table, overwrite=True)
     else:
-        writer = df.write.mode("overwrite")
+        counted, obs = _counted(df)
+        writer = counted.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.saveAsTable(table)
-    return LoadReport(table, "truncate_and_load", df.count(), tuple(df.columns))
+    return LoadReport(table, "truncate_and_load", obs.get["rows"], tuple(df.columns))
 
 
 def replace(df: DataFrame, table: str, partition_by: list[str] | None = None) -> LoadReport:
     """K3: drop + recreate the table from the DataFrame."""
     _require_database(df.sparkSession, table)
-    writer = df.write.mode("overwrite").option("overwriteSchema", "true")
+    counted, obs = _counted(df)
+    writer = counted.write.mode("overwrite").option("overwriteSchema", "true")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.saveAsTable(table)
-    return LoadReport(table, "replace", df.count(), tuple(df.columns))
+    return LoadReport(table, "replace", obs.get["rows"], tuple(df.columns))
 
 
 def append(df: DataFrame, table: str) -> LoadReport:
@@ -109,10 +124,12 @@ def append(df: DataFrame, table: str) -> LoadReport:
                 f"append into {table}: column mismatch df={sorted(df.columns)} "
                 f"table={sorted(target_cols)}"
             )
-        df.select(*target_cols).write.insertInto(table, overwrite=False)
+        counted, obs = _counted(df.select(*target_cols))
+        counted.write.insertInto(table, overwrite=False)
     else:
-        df.write.mode("append").saveAsTable(table)
-    return LoadReport(table, "append", df.count(), tuple(df.columns))
+        counted, obs = _counted(df)
+        counted.write.mode("append").saveAsTable(table)
+    return LoadReport(table, "append", obs.get["rows"], tuple(df.columns))
 
 
 def write_json_collection(df: DataFrame, path: str, mode: str = "overwrite") -> None:
@@ -133,8 +150,6 @@ def write_geojson_seq(
     every column except the geometry pair. A single FeatureCollection file
     would serialize through the driver; GeoJSONSeq is the scale-correct
     edge format and every modern GIS reader accepts it."""
-    from pyspark.sql import functions as F
-
     prop_cols = [c for c in df.columns if c not in (geom_type_col, coordinates_json_col)]
     # the coordinates column is already JSON — splice it in verbatim instead
     # of escape-mangling it through to_json
@@ -187,12 +202,11 @@ def merge_upsert(
     staging = f"{table}__merge_staging"
     merged.write.mode("overwrite").saveAsTable(staging)
     try:
-        staged = spark.table(staging)
-        rows = staged.count()
-        staged.select(*target.columns).write.insertInto(table, overwrite=True)
+        counted, obs = _counted(spark.table(staging).select(*target.columns))
+        counted.write.insertInto(table, overwrite=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    return LoadReport(table, "merge_upsert", rows, tuple(target.columns))
+    return LoadReport(table, "merge_upsert", obs.get["rows"], tuple(target.columns))
 
 
 def append_evolve(df: DataFrame, table: str) -> LoadReport:
@@ -208,13 +222,12 @@ def append_evolve(df: DataFrame, table: str) -> LoadReport:
     schema-merge semantics); the table schema is widened by recreating
     the table definition from the merged schema before the insert.
     """
-    from pyspark.sql import functions as F
-
     spark = df.sparkSession
     _require_database(spark, table)
     if not spark.catalog.tableExists(table):
-        df.write.mode("append").saveAsTable(table)
-        return LoadReport(table, "append_evolve", df.count(), tuple(df.columns))
+        counted, obs = _counted(df)
+        counted.write.mode("append").saveAsTable(table)
+        return LoadReport(table, "append_evolve", obs.get["rows"], tuple(df.columns))
 
     target = {f.name: f.dataType for f in spark.table(table).schema.fields}
     incoming = {f.name: f.dataType for f in df.schema.fields}
@@ -238,7 +251,10 @@ def append_evolve(df: DataFrame, table: str) -> LoadReport:
         existing = spark.table(table)
         for c in new_cols:
             existing = existing.withColumn(c, F.lit(None).cast(incoming[c]))
-        widened = existing.unionByName(df)
+        # the observation sits on the batch's side of the union, so it
+        # counts the appended rows, not the widened table
+        batch, obs = _counted(df)
+        widened = existing.unionByName(batch)
         staging = f"{table}__evolve_staging"
         widened.write.mode("overwrite").saveAsTable(staging)
         try:
@@ -247,5 +263,6 @@ def append_evolve(df: DataFrame, table: str) -> LoadReport:
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {staging}")
     else:
-        df.select(*target.keys()).write.insertInto(table, overwrite=False)
-    return LoadReport(table, "append_evolve", df.count(), tuple(df.columns))
+        counted, obs = _counted(df.select(*target.keys()))
+        counted.write.insertInto(table, overwrite=False)
+    return LoadReport(table, "append_evolve", obs.get["rows"], tuple(df.columns))

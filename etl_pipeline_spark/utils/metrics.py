@@ -22,8 +22,16 @@ STATUSES = ("done", "skip", "error", "recovered")
 
 @dataclass
 class RunSummary:
+    """Phase events of a run, plus ``rows_out``: the rows each load wrote,
+    keyed by ``(source name, feature class)``. The count is the sink's
+    ``LoadReport.rows``, observed inside the write job, so recording it
+    adds no job. Rows *in* are not recorded: an observation below the
+    clip would sit between the filter and the scan and block predicate
+    pushdown on parquet-staged sources."""
+
     started_at: float = field(default_factory=time.time)
     events: list[tuple[str, str, str, float]] = field(default_factory=list)
+    rows_out: dict[tuple[str, str], int] = field(default_factory=dict)
     max_errors_shown: int = 10  # the reference caps its error list at 10
 
     def log(self, phase: str, source: str, status: str, duration_s: float = 0.0) -> None:

@@ -77,19 +77,23 @@ def _in_job_group(spark, group: str, action) -> None:
         sc.setLocalProperty("spark.job.interruptOnCancel", None)
 
 
-def assert_fires_no_job(spark, action, control_parquet: str) -> None:
-    """Run ``action`` in its own job group and assert ``statusTracker``
-    lists no job for it.
+def jobs_fired(spark, action) -> list[int]:
+    """Run ``action`` in its own job group and return the ids of the jobs
+    ``statusTracker`` lists for it.
 
-    Control: a bare inference read of ``control_parquet`` in a later group
-    does fire a job; once the status store shows it, every job of the
+    Control: a one-task job in a later group. Job events reach the status
+    store in order, so once it shows the control job, every job of the
     earlier group is listed too."""
     tracker = spark.sparkContext.statusTracker()
-    quiet, control = f"quiet-{uuid.uuid4().hex}", f"infer-{uuid.uuid4().hex}"
-    _in_job_group(spark, quiet, action)
-    _in_job_group(spark, control, lambda: spark.read.parquet(control_parquet))
+    group, control = f"count-{uuid.uuid4().hex}", f"control-{uuid.uuid4().hex}"
+    _in_job_group(spark, group, action)
+    _in_job_group(spark, control, lambda: spark.sparkContext.parallelize([0], 1).count())
     deadline = time.monotonic() + 30
     while not tracker.getJobIdsForGroup(control) and time.monotonic() < deadline:
         time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(control), "inference job never reached the status store"
-    assert list(tracker.getJobIdsForGroup(quiet)) == []
+    assert tracker.getJobIdsForGroup(control), "control job never reached the status store"
+    return sorted(tracker.getJobIdsForGroup(group))
+
+
+def assert_fires_no_job(spark, action) -> None:
+    assert jobs_fired(spark, action) == []

@@ -12,6 +12,8 @@ import json
 
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 
 from etl_pipeline_spark.functions.geo import (
     bbox_filter,
@@ -161,3 +163,100 @@ def test_pip_sql_predicate_agrees_with_udf(spark):
         ).collect()
     )
     assert via_udf == via_sql and len(via_udf) > 50
+
+
+# reproject (Spark SQL) against the NumPy kernel. The JVM and libm round
+# transcendental functions differently, so parity is a tolerance, not bit
+# equality: 1e-6 m on eastings/northings, 1e-9° on degrees.
+_PAIRS = ((4326, 3006), (4326, 3010), (4326, 3011), (3006, 4326), (3006, 3010))
+
+
+def _numpy_reproject(xs, ys, src, dst):
+    if src != 4326:
+        xs, ys = tm_inverse(xs, ys, src)
+    if dst != 4326:
+        xs, ys = tm_forward(xs, ys, dst)
+    return xs, ys
+
+
+def _assert_parity(spark, lon, lat):
+    """Every pair of ``_PAIRS`` through ``reproject`` against the NumPy
+    kernel, on the given geographic points (their EPSG:3006 images for the
+    TM sources): NULL exactly where NumPy gives NaN, else within tolerance."""
+    lon, lat = np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64)
+    e, n = tm_forward(lon, lat, 3006)
+    df = spark.createDataFrame(
+        [(i, *map(float, r)) for i, r in enumerate(zip(lon, lat, e, n))],
+        "id bigint, lon double, lat double, e double, n double",
+    )
+    for k, (src, dst) in enumerate(_PAIRS):
+        df = reproject(df, *(("lon", "lat") if src == 4326 else ("e", "n")), src, dst,
+                       out_x=f"x{k}", out_y=f"y{k}")
+    got = df.orderBy("id").toPandas()
+    for k, (src, dst) in enumerate(_PAIRS):
+        want = _numpy_reproject(*((lon, lat) if src == 4326 else (e, n)), src, dst)
+        tol = 1e-9 if dst == 4326 else 1e-6
+        for col, w in zip((f"x{k}", f"y{k}"), want):
+            have = got[col].to_numpy(dtype=np.float64)
+            assert np.array_equal(np.isnan(have), np.isnan(w)), (src, dst, col)
+            err = np.abs(have - w)[~np.isnan(w)]
+            assert np.max(err, initial=0.0) <= tol, (src, dst, col, np.max(err))
+
+
+def test_reproject_matches_numpy_kernel_on_sweden_grid(spark):
+    lon, lat = np.meshgrid(np.linspace(10.5, 24.5, 15), np.linspace(55.0, 69.5, 12))
+    _assert_parity(spark, lon.ravel(), lat.ravel())
+
+
+@settings(max_examples=10, deadline=None)
+@given(
+    st.lists(
+        st.tuples(
+            st.floats(min_value=-180.0, max_value=180.0, allow_nan=False),
+            st.floats(min_value=-89.9, max_value=89.9, allow_nan=False),
+        ),
+        min_size=1,
+        max_size=40,
+    )
+)
+def test_reproject_matches_numpy_kernel_on_world_points(spark, pts):
+    _assert_parity(spark, *zip(*pts))
+
+
+def test_reproject_null_in_both_outputs(spark):
+    """A NULL coordinate, or a point outside the series' domain — the
+    (104.9°, 0°) probe forward, an easting 50,000 km off the central
+    meridian inverse — gives NULL in both outputs."""
+    df = spark.createDataFrame(
+        [(1, None, 60.0), (2, 15.0, None), (3, 104.9, 0.0), (4, 5e7, 6.5e6), (5, 18.0, 59.0)],
+        "id bigint, x double, y double",
+    )
+    for src, dst in _PAIRS:
+        rows = reproject(df, "x", "y", src, dst).orderBy("id").collect()
+        nulls = [r.id for r in rows if r.x_out is None and r.y_out is None]
+        half = [r.id for r in rows if (r.x_out is None) != (r.y_out is None)]
+        assert half == [], (src, dst)
+        assert nulls == ([1, 2, 3] if src == 4326 else [1, 2, 4]), (src, dst)
+
+
+def test_point_load_plan_runs_no_python(spark, tmp_path):
+    """Clip and reprojection of a staged point source plan as JVM
+    expressions: no Python evaluation node in the plan the sink runs."""
+    from etl_pipeline_spark.pipeline import Pipeline, PipelineConfig
+    from etl_pipeline_spark.sources.registry import SourceConfig
+    from etl_pipeline_spark.sources.staging import stage_path
+
+    path = tmp_path / "pts.geojson"
+    path.write_text(json.dumps({"type": "FeatureCollection", "features": [
+        {"type": "Feature", "properties": {"fid": i},
+         "geometry": {"type": "Point", "coordinates": [14.0 + i, 59.0]}}
+        for i in range(4)
+    ]}))
+    (name, df), = stage_path(spark, str(path)).items()
+    pipe = Pipeline(spark, PipelineConfig(landing_dir=str(tmp_path),
+                                          aoi_bbox=(14.5, 58.0, 25.0, 61.0)))
+    _, out = pipe.transform(SourceConfig(name="p", authority="A", type="file", url=str(path)),
+                            name, df)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan, plan
+    assert out.count() == 3

@@ -13,6 +13,7 @@ from etl_pipeline_spark.sources.gpkg import stage_gpkg
 from etl_pipeline_spark.sources.registry import SourceConfig
 from etl_pipeline_spark.sources.staging import extract_zip, glob_stageable_files, infer_staged_type
 from etl_pipeline_spark.utils.metrics import RunSummary
+from tests.conftest import jobs_fired
 
 
 class FakeTransport:
@@ -394,3 +395,27 @@ def test_pipeline_atom_feed_relative_hrefs(spark, tmp_path):
         assert spark.table("prod_atom_rel.x_rel").count() == 2
     finally:
         spark.sql("DROP DATABASE IF EXISTS prod_atom_rel CASCADE")
+
+
+@pytest.mark.parametrize(
+    "aoi, kept",
+    [((15.5, 58.0, 25.0, 61.0), 5), ((100.0, 0.0, 101.0, 1.0), 0)],
+    ids=["clips_some", "clips_all"],
+)
+def test_pipeline_run_is_two_jobs_and_records_rows_out(spark, tmp_path, prod_db, aoi, kept):
+    """One REST source is two Spark jobs: the JSON schema inference at
+    stage and the write, which also counts the rows for
+    ``RunSummary.rows_out`` — on the run that creates the table and on the
+    rerun that overwrites it."""
+    src = SourceConfig(name="Vägar Källa", authority="TRV", type="rest_api",
+                       url="https://x/FeatureServer")
+    table = f"{prod_db}.trv_vagar_kalla_layer0"
+    for run in range(2):
+        cfg = PipelineConfig(landing_dir=str(tmp_path / f"landing{run}"),
+                             production_db=prod_db, aoi_bbox=aoi, target_epsg=3006)
+        pipe = Pipeline(spark, cfg, transport=FakeTransport())
+        summaries = []
+        jobs = jobs_fired(spark, lambda: summaries.append(pipe.run([src])))
+        assert len(jobs) == 2, (run, jobs)
+        assert summaries[0].rows_out == {("Vägar Källa", "trv_vagar_kalla_layer0"): kept}
+        assert spark.table(table).count() == kept

@@ -156,7 +156,6 @@ def test_persisted_index_quantizer_reads_fire_no_job(spark, emb, tmp_path):
     assert_fires_no_job(
         spark,
         lambda: [_read_index_part(spark, path, p) for p in ("pivots", "codebook")],
-        f"{path}/pivots",
     )
     for p in ("pivots", "codebook"):
         assert _read_index_part(spark, path, p).schema == spark.read.parquet(f"{path}/{p}").schema

@@ -13,6 +13,7 @@ from etl_pipeline_spark.sinks import (
     validate_before_load,
     write_json_collection,
 )
+from tests.conftest import jobs_fired
 
 
 @pytest.fixture(scope="module")
@@ -147,7 +148,7 @@ def test_append_evolve_adds_nullable_column(spark, db):
     t = f"{db}.fc_evolve"
     replace(_df(spark, [(1, "a"), (2, "b")]), t)
     wide = spark.createDataFrame([(3, "c", 9.5)], "id bigint, name string, score double")
-    append_evolve(wide, t)
+    assert append_evolve(wide, t).rows == 1  # the batch, not the widened table
     got = {(r.id, r.name, r.score) for r in spark.table(t).collect()}
     # old rows read NULL for the evolved column
     assert got == {(1, "a", None), (2, "b", None), (3, "c", 9.5)}
@@ -167,3 +168,41 @@ def test_append_evolve_refuses_drops_and_type_changes(spark, db):
         append_evolve(spark.createDataFrame([(2,)], "id bigint"), t)
     with pytest.raises(ValueError, match="type change"):
         append_evolve(spark.createDataFrame([(2, 3)], "id bigint, name bigint"), t)
+
+
+def test_each_sink_is_one_job_that_counts_its_rows(spark, db):
+    """Every sink writes in one job and reads ``LoadReport.rows`` from an
+    observation inside it — both when it creates the table and when it
+    writes into the existing one. ``merge_upsert`` fires the jobs of its
+    staging write (under AQE its anti join's exchanges run as jobs of
+    their own) and one more: the insert."""
+    from etl_pipeline_spark.sinks import append_evolve
+    from etl_pipeline_spark.sinks.writers import merge_upsert
+    for sink in (truncate_and_load, replace, append, append_evolve):
+        t = f"{db}.fc_jobs_{sink.__name__}"
+        for rows in ([(1, "a"), (2, "b")], [(3, "c")]):
+            reports = []
+            jobs = jobs_fired(spark, lambda: reports.append(sink(_df(spark, rows), t)))
+            assert len(jobs) == 1, (sink.__name__, jobs)
+            assert reports[0].rows == len(rows), sink.__name__
+
+    t = f"{db}.fc_jobs_merge"
+    replace(_df(spark, [(1, "a"), (2, "b")]), t)
+    updates = _df(spark, [(2, "B"), (3, "c")])
+    merged = spark.table(t).join(updates, on=["id"], how="leftanti").unionByName(updates)
+    staging_jobs = jobs_fired(
+        spark, lambda: merged.write.mode("overwrite").saveAsTable(f"{db}.fc_jobs_merge_probe")
+    )
+    reports = []
+    jobs = jobs_fired(spark, lambda: reports.append(merge_upsert(updates, t, ["id"])))
+    assert len(jobs) == len(staging_jobs) + 1, (staging_jobs, jobs)
+    assert reports[0].rows == spark.table(t).count() == 3
+
+
+@pytest.mark.parametrize("n", [3, 0])
+def test_load_report_rows_is_the_table_count(spark, db, n):
+    rows = [(i, f"n{i}") for i in range(n)]
+    for sink in (replace, truncate_and_load):
+        t = f"{db}.fc_rows_{n}"
+        rep = sink(_df(spark, rows), t)
+        assert rep.rows == spark.table(t).count() == n, sink.__name__

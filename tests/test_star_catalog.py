@@ -176,7 +176,6 @@ def test_load_table_fires_no_spark_job(spark, tmp_path):
     assert_fires_no_job(
         spark,
         lambda: [load_table(spark, sf, t, validate=True) for t in TABLES],
-        f"{sf}/orders.parquet",
     )
 
 
