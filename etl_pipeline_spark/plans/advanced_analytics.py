@@ -38,10 +38,7 @@ from pyspark.sql.window import Window
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.star import load_table
 from etl_pipeline_spark.utils.local_rows import values_df
-from etl_pipeline_spark.utils.session_cache import memoized_relation, register_cache
-
-# sparsified word co-occurrence graph, memoized per (session, sf_dir)
-_WORDGRAPH_CACHE: dict[tuple, DataFrame] = register_cache({})
+from etl_pipeline_spark.utils.session_cache import session_memo
 
 # ---------------------------------------------------------------------------
 # TextRank keywords. Word nodes are frequency-pruned (count ≥ _TR_MIN_C
@@ -156,9 +153,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # explode + top-k per node) is a written-once relation — memoized
     # per (session, sf_dir) like the co-supplier edges, so repeated
     # executions and future word-graph consumers pay the build once.
-    rel = memoized_relation(
-        _WORDGRAPH_CACHE, spark, (sf_dir,), lambda: _textrank_word_graph(spark, sf_dir)
-    )
+    rel = _textrank_word_graph(spark, sf_dir)
     edges = rel.unionByName(
         rel.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -172,6 +167,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _textrank_word_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-k sparsified word co-occurrence graph (src < dst, distinct)."""
     from etl_pipeline_spark.plans.text_analytics import _doc_terms

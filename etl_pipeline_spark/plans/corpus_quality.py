@@ -40,7 +40,7 @@ from etl_pipeline_spark.operators.graph import (
 )
 from etl_pipeline_spark.operators.packing import pack_sequences
 from etl_pipeline_spark.operators.sampling import hash_u32_sql
-from etl_pipeline_spark.utils.session_cache import register_cache, session_key
+from etl_pipeline_spark.utils.session_cache import session_memo
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.star import load_table
 
@@ -578,16 +578,11 @@ def triangle_cosupplier_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 # union sides + three join aliases) — one materialization instead of ~7
 # recomputes of the order-pair self-join. Same discipline as the shingle
 # cache in plans/llm.py; at scale this is a written-once edge table.
-_EDGE_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
+@session_memo
 def cosupplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    if key not in _EDGE_CACHE:
-        li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-        pairs = cooccurrence_pairs(li, "l_orderkey", "l_suppkey")
-        _EDGE_CACHE[key] = topk_neighbor_edges(pairs, k=3).persist()
-    return _EDGE_CACHE[key]
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    pairs = cooccurrence_pairs(li, "l_orderkey", "l_suppkey")
+    return topk_neighbor_edges(pairs, k=3)
 
 
 # ---------------------------------------------------------------------------

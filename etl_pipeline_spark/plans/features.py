@@ -28,10 +28,8 @@ from etl_pipeline_spark.plans.corpus_quality import COSUPPLIER_EDGE_CTES
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.embeddings import EMB_VALID_ORACLE, load_embeddings
 from etl_pipeline_spark.sources.star import load_table
-from etl_pipeline_spark.utils.session_cache import memoized_relation, register_cache
+from etl_pipeline_spark.utils.session_cache import session_memo
 
-# customer→supplier bipartite HITS edges, memoized per (session, sf_dir)
-_HITS_EDGE_CACHE: dict[tuple, "DataFrame"] = register_cache({})
 
 # deterministic LPA labels over the co-supplier graph, memoized per
 # (session, sf_dir, n_iter): lpa_cosupplier_communities and
@@ -39,18 +37,11 @@ _HITS_EDGE_CACHE: dict[tuple, "DataFrame"] = register_cache({})
 # (same edges, same tie rule, same round count) — one materialization
 # instead of two. label_propagation eagerly localCheckpoints its rounds,
 # so the memo entry is an already-materialized node-sized relation.
-_LPA_LABELS_CACHE: dict[tuple, "DataFrame"] = register_cache({})
-
-
+@session_memo
 def _lpa_labels(spark: SparkSession, sf_dir: str, n_iter: int) -> DataFrame:
     from etl_pipeline_spark.plans.corpus_quality import cosupplier_edges
 
-    return memoized_relation(
-        _LPA_LABELS_CACHE,
-        spark,
-        (sf_dir, n_iter),
-        lambda: label_propagation(cosupplier_edges(spark, sf_dir), n_iter=n_iter),
-    )
+    return label_propagation(cosupplier_edges(spark, sf_dir), n_iter=n_iter)
 
 
 # ---------------------------------------------------------------------------
@@ -1154,28 +1145,24 @@ def _hits_oracle() -> str:
     """
 
 
+# customer→supplier bipartite HITS edges, memoized per (session, sf_dir)
+@session_memo
+def _hits_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    orders = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        orders.join(li, orders.o_orderkey == li.l_orderkey)
+        .select(F.col("o_custkey").alias("hub"), F.col("l_suppkey").alias("auth"))
+        .distinct()
+    )
+
+
 @register(
     "hits_hub_authority",
     oracle=_hits_oracle(),
     tags=("graph", "iterative", "ranking"),
 )
 def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _build() -> DataFrame:
-        orders = load_table(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey"
-        )
-        li = load_table(spark, sf_dir, "lineitem").select(
-            "l_orderkey", "l_suppkey"
-        )
-        return (
-            orders.join(li, orders.o_orderkey == li.l_orderkey)
-            .select(
-                F.col("o_custkey").alias("hub"),
-                F.col("l_suppkey").alias("auth"),
-            )
-            .distinct()
-        )
-
     # The customer→supplier bipartite relation is the fact-linear part of
     # this query (orders⋈lineitem + distinct); the HITS rounds below are
     # state-sized. Memoize + persist it per (session, sf_dir) like the
@@ -1185,7 +1172,7 @@ def hits_hub_authority(spark: SparkSession, sf_dir: str) -> DataFrame:
     # than twenty InMemoryTableScans; materializing the checkpoint from
     # cache is a cheap cache scan on warm executions instead of the full
     # orders⋈lineitem build.
-    e = memoized_relation(_HITS_EDGE_CACHE, spark, (sf_dir,), _build)
+    e = _hits_edges(spark, sf_dir)
     e = e.localCheckpoint(eager=False)
     h = e.select("hub").distinct().select("hub", F.lit(1.0).alias("s"))
 

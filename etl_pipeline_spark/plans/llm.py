@@ -50,11 +50,7 @@ from etl_pipeline_spark.operators.similarity import (
     pq_topk_relational,
     sign_lsh_topk,
 )
-from etl_pipeline_spark.utils.session_cache import (
-    memoized_relation,
-    register_cache,
-    session_key,
-)
+from etl_pipeline_spark.utils.session_cache import session_memo
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.embeddings import (
     EMB_LABELED_ORACLE,
@@ -84,29 +80,17 @@ _SHINGLES_DUCK = """
 """
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = register_cache({})
-
-# exact-Jaccard near-dup pair relation, memoized per (session, sf_dir, thr)
-_JACCARD_PAIRS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
 # banded-LSH candidate pairs over the shared shingle relation, memoized
 # per (session, sf_dir): a candidate table is a build-once artifact (two
 # seeded-md5 passes over every shingle + the band self-join), and BOTH
 # registered consumers (dedup_minhash_lsh, dedup_lsh_recall_eval) build
 # the identical relation — same hashes, bands, and band keys.
-_LSH_CANDIDATES_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
+@session_memo
 def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return memoized_relation(
-        _LSH_CANDIDATES_CACHE,
-        spark,
-        (sf_dir,),
-        lambda: lsh_candidates(
-            minhash_signatures(_doc_shingles(spark, sf_dir), _N_HASHES),
-            _N_HASHES,
-            _BAND_SIZE,
-        ),
+    return lsh_candidates(
+        minhash_signatures(_doc_shingles(spark, sf_dir), _N_HASHES),
+        _N_HASHES,
+        _BAND_SIZE,
     )
 
 
@@ -118,22 +102,16 @@ def _lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # (relational_analytics._er_clusters). cluster_assignments eagerly
 # localCheckpoints its rounds, so the entry is already materialized and
 # cluster-count-sized.
-_DEDUP_CLUSTERS_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
+@session_memo
 def _dedup_clusters(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> DataFrame:
-    return memoized_relation(
-        _DEDUP_CLUSTERS_CACHE,
-        spark,
-        (sf_dir, threshold),
-        lambda: cluster_assignments(
-            _jaccard_pairs(spark, sf_dir, threshold).select("doc_a", "doc_b"),
-            "doc_a",
-            "doc_b",
-        ),
+    return cluster_assignments(
+        _jaccard_pairs(spark, sf_dir, threshold).select("doc_a", "doc_b"),
+        "doc_a",
+        "doc_b",
     )
 
 
+@session_memo
 def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingle) — distinct word-3-shingles per document.
 
@@ -143,11 +121,8 @@ def _doc_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes. At true 100 TB scale you'd checkpoint shingles to parquet
     instead of memory-persisting; the plan shape is identical.
     """
-    key = (session_key(spark), sf_dir)
-    if key not in _SHINGLE_CACHE:
-        docs = load_table(spark, sf_dir, "documents")
-        _SHINGLE_CACHE[key] = shingles(docs, "doc_id", "text", 3).persist()
-    return _SHINGLE_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents")
+    return shingles(docs, "doc_id", "text", 3)
 
 
 # The jaccard runs on the DF_CAP-capped shingle relation (boilerplate
@@ -179,6 +154,7 @@ _JACCARD_PAIRS_DUCK = f"""
 """
 
 
+@session_memo
 def _jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> DataFrame:
     """Exact Jaccard near-dup pairs over the DF_CAP-capped shingle
     relation (operators/dedup.py:DF_CAP). CAP SEMANTICS apply to every
@@ -197,12 +173,7 @@ def _jaccard_pairs(spark: SparkSession, sf_dir: str, threshold: float = 0.5) -> 
     ~4 s of executor time per execution). The pair relation itself is
     near-dup-sized (tiny next to the corpus); build() is pure in
     (spark, sf_dir, threshold), so reuse is semantically invisible."""
-    return memoized_relation(
-        _JACCARD_PAIRS_CACHE,
-        spark,
-        (sf_dir, threshold),
-        lambda: jaccard_pairs(_doc_shingles(spark, sf_dir), threshold),
-    )
+    return jaccard_pairs(_doc_shingles(spark, sf_dir), threshold)
 
 
 # --------------------------------------------------------------------------
@@ -338,53 +309,48 @@ _HEX_DECODE_FAST = "CAST(conv(substr(md5(tok), 1, 8), 16, 10) AS BIGINT)"
 # registered consumers (simhash_fingerprints, dedup_simhash_hamming)
 # otherwise re-run the md5-per-token vote build — the most expensive
 # subtree in the simhash family (~12 s executor per build at sf0.1)
-_SIMHASH_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
+@session_memo
 def _simhash_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    def _build() -> DataFrame:
-        docs = fan_out_scan(
-            load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        )
-        toks = docs.select(
-            "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
-        )
-        hv = toks.select("doc_id", F.expr(_HEX_DECODE_FAST).alias("v"))
-        # One groupBy(doc_id) with 32 conditional ±1 sums instead of
-        # explode(0..31) → groupBy(doc_id, bit) → groupBy(doc_id): the
-        # explode amplified every token row 32× BEFORE the first
-        # exchange (guide §2.3 "aggregate before you shuffle") and paid
-        # a second doc-keyed shuffle for the re-fold. Each vote_b is the
-        # identical integer sum of +1/−1 per token (same values, exact
-        # arithmetic), evaluated map-side over un-amplified rows; the
-        # final projection folds the 32 votes into the fingerprint
-        # (A/B numbers in OPTIMIZATION_r12.md).
-        votes = hv.groupBy("doc_id").agg(
-            *[
-                F.sum(
-                    F.when(
-                        F.expr(f"(v div {1 << b}L) % 2") == 1, F.lit(1)
-                    ).otherwise(F.lit(-1))
-                ).alias(f"vote{b}")
+    docs = fan_out_scan(
+        load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    )
+    toks = docs.select(
+        "doc_id", F.explode(F.split(F.col("text"), " ")).alias("tok")
+    )
+    hv = toks.select("doc_id", F.expr(_HEX_DECODE_FAST).alias("v"))
+    # One groupBy(doc_id) with 32 conditional ±1 sums instead of
+    # explode(0..31) → groupBy(doc_id, bit) → groupBy(doc_id): the
+    # explode amplified every token row 32× BEFORE the first
+    # exchange (guide §2.3 "aggregate before you shuffle") and paid
+    # a second doc-keyed shuffle for the re-fold. Each vote_b is the
+    # identical integer sum of +1/−1 per token (same values, exact
+    # arithmetic), evaluated map-side over un-amplified rows; the
+    # final projection folds the 32 votes into the fingerprint
+    # (A/B numbers in OPTIMIZATION_r12.md).
+    votes = hv.groupBy("doc_id").agg(
+        *[
+            F.sum(
+                F.when(
+                    F.expr(f"(v div {1 << b}L) % 2") == 1, F.lit(1)
+                ).otherwise(F.lit(-1))
+            ).alias(f"vote{b}")
+            for b in range(32)
+        ]
+    )
+    return votes.select(
+        "doc_id",
+        sum(
+            [
+                F.when(F.col(f"vote{b}") > 0, F.lit(1 << b)).otherwise(
+                    F.lit(0)
+                )
                 for b in range(32)
-            ]
+            ],
+            F.lit(0),
         )
-        return votes.select(
-            "doc_id",
-            sum(
-                [
-                    F.when(F.col(f"vote{b}") > 0, F.lit(1 << b)).otherwise(
-                        F.lit(0)
-                    )
-                    for b in range(32)
-                ],
-                F.lit(0),
-            )
-            .cast("bigint")
-            .alias("simhash"),
-        )
-
-    return memoized_relation(_SIMHASH_CACHE, spark, (sf_dir,), _build)
+        .cast("bigint")
+        .alias("simhash"),
+    )
 
 
 @register(

@@ -46,10 +46,7 @@ from etl_pipeline_spark.operators.packing import range_bucketed_rank
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.star import load_table
 from etl_pipeline_spark.utils.parallelism import fan_out_scan
-from etl_pipeline_spark.utils.session_cache import register_cache
-
-# shared two-rule ER cluster relation, memoized per (session, sf_dir)
-_ER_CLUSTERS_CACHE: dict[tuple, "DataFrame"] = register_cache({})
+from etl_pipeline_spark.utils.session_cache import session_memo
 
 # ---------------------------------------------------------------------------
 # Adamic–Adar link prediction over the top-3 co-supplier graph: for every
@@ -217,6 +214,7 @@ def entity_resolution_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo
 def _er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, cluster_id, is_canonical, cluster_size) for the shared
     two-rule ER corpus — used by the resolver and its eval.
@@ -227,16 +225,8 @@ def _er_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     connected-components rounds; build() is pure in (spark, sf_dir), so
     reuse is semantically invisible."""
     from etl_pipeline_spark.operators.graph import cluster_assignments
-    from etl_pipeline_spark.utils.session_cache import memoized_relation
 
-    return memoized_relation(
-        _ER_CLUSTERS_CACHE,
-        spark,
-        (sf_dir,),
-        lambda: cluster_assignments(
-            _er_candidate_pairs(spark, sf_dir), "id_a", "id_b"
-        ),
-    )
+    return cluster_assignments(_er_candidate_pairs(spark, sf_dir), "id_a", "id_b")
 
 
 def _er_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

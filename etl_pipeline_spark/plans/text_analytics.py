@@ -41,7 +41,7 @@ from pyspark.sql.window import Window
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.embeddings import EMB_VALID_ORACLE, load_embeddings
 from etl_pipeline_spark.sources.star import load_table
-from etl_pipeline_spark.utils.session_cache import register_cache, session_key
+from etl_pipeline_spark.utils.session_cache import session_memo
 
 # ---------------------------------------------------------------------------
 # Shared token / bigram extraction. Documents are whitespace-tokenized.
@@ -76,43 +76,31 @@ _BIGRAMS_DUCK = """
 # One materialization replaces ~7 re-tokenizations; at true scale you'd
 # checkpoint the tokenized relation to parquet once — the standard
 # tokenize-once corpus layout — and these queries would read it.
-_TOKEN_CACHE: dict[tuple, DataFrame] = register_cache({})
-_BIGRAM_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
+@session_memo
 def _doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    if key not in _TOKEN_CACHE:
-        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-        _TOKEN_CACHE[key] = docs.select(
-            "doc_id", F.explode(F.split("text", " ")).alias("term")
-        ).persist()
-    return _TOKEN_CACHE[key]
+    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+    return docs.select("doc_id", F.explode(F.split("text", " ")).alias("term"))
 
 
+@session_memo
 def _doc_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (session_key(spark), sf_dir)
-    if key not in _BIGRAM_CACHE:
-        # bind the token array ONCE (inlining split() into the lambda
-        # re-splits per element access — the O(n²) trap named in
-        # advanced_analytics' textrank extraction), and filter out
-        # sub-2-token docs so sequence(1, size-1) never hits the
-        # descending sequence(1, 0) edge
-        docs = (
-            load_table(spark, sf_dir, "documents")
-            .select("doc_id", F.split("text", " ").alias("toks"))
-            .filter(F.size("toks") >= 2)
+    # bind the token array ONCE (inlining split() into the lambda
+    # re-splits per element access — the O(n²) trap named in
+    # advanced_analytics' textrank extraction), and filter out
+    # sub-2-token docs so sequence(1, size-1) never hits the
+    # descending sequence(1, 0) edge
+    docs = (
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id", F.split("text", " ").alias("toks"))
+        .filter(F.size("toks") >= 2)
+    )
+    pair = F.explode(
+        F.expr(
+            "transform(sequence(1, size(toks) - 1),"
+            " i -> struct(toks[i-1] AS w1, toks[i] AS w2))"
         )
-        pair = F.explode(
-            F.expr(
-                "transform(sequence(1, size(toks) - 1),"
-                " i -> struct(toks[i-1] AS w1, toks[i] AS w2))"
-            )
-        ).alias("bg")
-        _BIGRAM_CACHE[key] = (
-            docs.select("doc_id", pair).select("doc_id", "bg.w1", "bg.w2").persist()
-        )
-    return _BIGRAM_CACHE[key]
+    ).alias("bg")
+    return docs.select("doc_id", pair).select("doc_id", "bg.w1", "bg.w2")
 
 
 # ---------------------------------------------------------------------------

@@ -22,10 +22,7 @@ from etl_pipeline_spark.operators.textprep import (
 )
 from etl_pipeline_spark.plans.registry import register
 from etl_pipeline_spark.sources.star import load_table
-from etl_pipeline_spark.utils.session_cache import memoized_relation, register_cache
-
-# part-supplier bipartite edges, memoized per (session, sf_dir)
-_PS_EDGE_CACHE: dict[tuple, DataFrame] = register_cache({})
+from etl_pipeline_spark.utils.session_cache import session_memo
 
 # --------------------------------------------------------------------------
 # Overlapping token chunking: chunk_size=20, stride=15 (5-token overlap).
@@ -309,6 +306,27 @@ def _pagerank_oracle(n_iter: int = 5, damping: float = 0.85) -> str:
     """
 
 
+# Written-once edge table, built by the first execution of the session
+# and reused after, like the co-supplier edges.
+@session_memo
+def _part_supplier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    # fact-linear: one lineitem scan + distinct; the symmetrized union
+    # doubles rows but not the scan
+    rel = (
+        load_table(spark, sf_dir, "lineitem")
+        .select(
+            (F.col("l_partkey") * 2).alias("part_node"),
+            (F.col("l_suppkey") * 2 + 1).alias("supp_node"),
+        )
+        .distinct()
+    )
+    return rel.select(
+        F.col("part_node").alias("src"), F.col("supp_node").alias("dst")
+    ).unionByName(
+        rel.select(F.col("supp_node").alias("src"), F.col("part_node").alias("dst"))
+    )
+
+
 @register(
     "pagerank_part_supplier",
     oracle=_pagerank_oracle(5),
@@ -317,30 +335,7 @@ def _pagerank_oracle(n_iter: int = 5, damping: float = 0.85) -> str:
 def pagerank_part_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_spark.operators.graph import pagerank
 
-    def _build() -> DataFrame:
-        # fact-linear: one lineitem scan + distinct; the symmetrized
-        # union doubles rows but not the scan
-        rel = (
-            load_table(spark, sf_dir, "lineitem")
-            .select(
-                (F.col("l_partkey") * 2).alias("part_node"),
-                (F.col("l_suppkey") * 2 + 1).alias("supp_node"),
-            )
-            .distinct()
-        )
-        return rel.select(
-            F.col("part_node").alias("src"), F.col("supp_node").alias("dst")
-        ).unionByName(
-            rel.select(
-                F.col("supp_node").alias("src"), F.col("part_node").alias("dst")
-            )
-        )
-
-    # Written-once edge table, built by the first execution of the
-    # session and reused after (utils/session_cache.py discipline — the
-    # same transparent reuse the co-supplier wave already gets); the
-    # pagerank rounds below are state-sized either way.
-    edges = memoized_relation(_PS_EDGE_CACHE, spark, (sf_dir,), _build)
+    edges = _part_supplier_edges(spark, sf_dir)
     # caller_cached=True: `edges` IS the memoized persisted relation, so
     # pagerank must not persist/unpersist it (the unpersist would evict
     # this session memo — the operator no longer has to infer that from
@@ -447,22 +442,15 @@ _CMS_DEPTH, _CMS_WIDTH = 4, 4096
 # registered consumers (cms_partkey_estimates, cms_heavy_hitters) build
 # the IDENTICAL ≤ depth×width-row relation with a full md5 pass over the
 # fact table — the most expensive shared subtree in the sketch family.
-_CMS_SKETCH_CACHE: dict[tuple, DataFrame] = register_cache({})
-
-
+@session_memo
 def _cms_partkey_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     from etl_pipeline_spark.operators.sketch import cms_build
 
-    return memoized_relation(
-        _CMS_SKETCH_CACHE,
-        spark,
-        (sf_dir, "l_partkey", _CMS_DEPTH, _CMS_WIDTH),
-        lambda: cms_build(
-            load_table(spark, sf_dir, "lineitem").select("l_partkey"),
-            "l_partkey",
-            _CMS_DEPTH,
-            _CMS_WIDTH,
-        ),
+    return cms_build(
+        load_table(spark, sf_dir, "lineitem").select("l_partkey"),
+        "l_partkey",
+        _CMS_DEPTH,
+        _CMS_WIDTH,
     )
 
 

@@ -14,6 +14,12 @@ table fires no Spark job: a bare `spark.read.parquet` runs a
 schema-inference job per call, which was the fixed floor of every cold
 query. `parquet_schema` returns exactly what that inference returns.
 
+`load_table` keeps no memo and does not depend on the session memos:
+each call returns a fresh lazy read. What a memo hit would save is one
+footer read and the analysis of one scan relation (about 10 ms at sf0.01
+on a 4-core host); the relations worth reusing are built downstream and
+memoized there (utils/session_cache.py::session_memo).
+
 `events.parquet` carries INT64 TIMESTAMP(NANOS) which Spark's parquet reader
 rejects by default; we flip `spark.sql.legacy.parquet.nanosAsLong` at runtime
 and expose `ts` as nanosecond epoch (bigint). Query code uses pure epoch
@@ -24,14 +30,11 @@ from __future__ import annotations
 
 import json
 import os
-from threading import Lock
 
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-from etl_pipeline_spark.utils.session_cache import register_cache, session_key
 
 TABLES = (
     "region",
@@ -80,36 +83,18 @@ EXPECTED_COLUMNS: dict[str, set[str]] = {
 }
 
 
-# Per-(session, sf_dir, table) memo of the ANALYZED relation. A read
-# fires no Spark job (the schema comes from the parquet footer), so what a
-# hit saves is the driver-side footer read plus the analysis of the scan
-# relation; a suite that touches the catalog hundreds of times still pays
-# those once per table. NO persist() anywhere: the memo holds a lazy plan,
-# so every action still recomputes from the parquet input — plan reuse,
-# not result caching. Cleared with the other session memos via
-# clear_caches().
-_TABLE_MEMO: dict = register_cache({})
-_TABLE_LOCK = Lock()
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str, *, validate: bool = False) -> DataFrame:
     """Read one star-schema table from ``{sf_dir}/{name}.parquet``."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    key = (session_key(spark), sf_dir, name)
-    with _TABLE_LOCK:
-        df = _TABLE_MEMO.get(key)
-    if df is None:
-        path = f"{sf_dir}/{name}.parquet"
-        if name == "events":
-            # INT64 TIMESTAMP(NANOS) is unreadable as a Spark timestamp; read
-            # the physical int64 and treat `ts` as epoch-ns downstream.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.schema(parquet_schema(path)).parquet(path)
-        if name == "events":
-            df = _events_ts_to_epoch_ns(df)
-        with _TABLE_LOCK:
-            df = _TABLE_MEMO.setdefault(key, df)
+    path = f"{sf_dir}/{name}.parquet"
+    if name == "events":
+        # INT64 TIMESTAMP(NANOS) is unreadable as a Spark timestamp; read
+        # the physical int64 and treat `ts` as epoch-ns downstream.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    df = spark.read.schema(parquet_schema(path)).parquet(path)
+    if name == "events":
+        df = _events_ts_to_epoch_ns(df)
     if validate:
         missing = EXPECTED_COLUMNS[name] - set(df.columns)
         if missing:

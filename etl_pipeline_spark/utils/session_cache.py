@@ -1,11 +1,23 @@
 """Session-scoped memo caches for persisted relations, with a lifecycle.
 
-Several plan modules memoize a written-once relation per (session,
-dataset) — the shingle table (plans/llm.py), the co-supplier edge set
-(plans/corpus_quality.py), ANN index artifacts (operators/similarity.py).
-The memo is the honest production shape (an index is built once and
-queried many times), but it needs two disciplines this module centralizes:
+Several plan modules share a written-once relation across queries per
+(session, dataset) — the shingle table (plans/llm.py), the co-supplier
+edge set (plans/corpus_quality.py), the partsupp proxy
+(plans/tpch_extended.py). The memo is the honest production shape (an
+index is built once and queried many times), but it needs disciplines
+this module centralizes, so ``session_memo`` is the one way to memoize:
 
+- **One decorator**: ``@session_memo`` over a builder
+  ``build(spark, *args)`` owns the builder's cache dict and keys each
+  entry by the builder's arguments after ``spark``, bound with their
+  defaults applied — the key cannot leave an argument out, and
+  ``f(spark, d)`` and ``f(spark, d, 0.5)`` share one entry when 0.5 is the
+  default. Every call goes through ``memoized_relation`` (its lock, the
+  session LRU cap below, and the counters a benchmark trace wraps around
+  it). The one cache dict outside it is ``operators/similarity.py``'s
+  ``_INDEX_MEMO``: its values mix driver-side quantizer lists with a
+  DataFrame, which ``memoized_relation``'s persist-and-compare does not
+  fit.
 - **Keying**: ``session_key`` is ``"<applicationId>/<sessionUUID>"`` — a
   stable identity of one SparkSession. Sessions that share a SparkContext
   (``spark.newSession()``) have separate catalogs, so they must not share
@@ -42,6 +54,8 @@ whatever remains without relying on session GC order.
 from __future__ import annotations
 
 import atexit
+import functools
+import inspect
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -118,6 +132,31 @@ def memoized_relation(cache: dict, spark: SparkSession, extra_key: tuple, build)
         if not b_plan.sameResult(w_plan):
             built.unpersist()
     return winner
+
+
+def session_memo(build):
+    """Memoize + persist ``build(spark, *args)`` per (session, *args).
+
+    The key is the builder's arguments after ``spark``, bound by its
+    signature with defaults applied, so every argument that can change
+    the result is in it. ``build`` must be pure in those arguments (see
+    ``memoized_relation``); the decorated function returns the persisted
+    relation."""
+    cache = register_cache({})
+    signature = inspect.signature(build)
+
+    @functools.wraps(build)
+    def memo(*args, **kwargs) -> DataFrame:
+        bound = signature.bind(*args, **kwargs)
+        bound.apply_defaults()
+        spark, *key = bound.arguments.values()
+        # the module-global lookup at call time lets a tracer patch
+        # memoized_relation and see every memo hit and miss
+        return memoized_relation(
+            cache, spark, tuple(key), lambda: build(*bound.args, **bound.kwargs)
+        )
+
+    return memo
 
 
 def _unpersist_values(values: list) -> None:

@@ -97,3 +97,20 @@ def jobs_fired(spark, action) -> list[int]:
 
 def assert_fires_no_job(spark, action) -> None:
     assert jobs_fired(spark, action) == []
+
+
+def assert_memo_round_trip(spark, builder, sf_dir: str) -> None:
+    """A ``session_memo`` builder returns one persisted relation per
+    session, ``clear_caches`` unpersists it, and the next call rebuilds
+    equal rows."""
+    from etl_pipeline_spark.utils.session_cache import clear_caches
+
+    rel = builder(spark, sf_dir)
+    assert builder(spark, sf_dir) is rel
+    assert rel.storageLevel.useMemory  # persisted, not a cold plan
+    rows = sorted(rel.collect())
+    clear_caches(spark)
+    assert not rel.storageLevel.useMemory
+    again = builder(spark, sf_dir)
+    assert again is not rel
+    assert sorted(again.collect()) == rows

@@ -15,6 +15,7 @@ import pytest
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
 from etl_pipeline_spark.utils.session_cache import clear_caches
+from tests.conftest import assert_memo_round_trip
 
 _ensure_loaded()
 
@@ -79,20 +80,17 @@ def test_pagerank_does_not_evict_caller_cached_edges(spark):
 
 
 def test_memo_returns_same_persisted_relation(spark):
-    from etl_pipeline_spark.plans.features import _HITS_EDGE_CACHE
-    from etl_pipeline_spark.plans.text_pipeline import _PS_EDGE_CACHE
+    from etl_pipeline_spark.plans.features import _hits_edges
+    from etl_pipeline_spark.plans.text_pipeline import _part_supplier_edges
 
-    clear_caches(spark)
-    _rows(spark, "hits_hub_authority")
-    _rows(spark, "pagerank_part_supplier")
-    for cache in (_HITS_EDGE_CACHE, _PS_EDGE_CACHE):
-        assert len(cache) == 1
-        (df,) = cache.values()
-        assert df.storageLevel.useMemory  # persisted, not a cold plan
-    # a second execution must hit the same entry, not re-insert
-    h1 = next(iter(_HITS_EDGE_CACHE.values()))
-    _rows(spark, "hits_hub_authority")
-    assert next(iter(_HITS_EDGE_CACHE.values())) is h1
-    n = clear_caches(spark)
-    assert n >= 2
-    assert not _HITS_EDGE_CACHE and not _PS_EDGE_CACHE
+    for name, builder in (
+        ("hits_hub_authority", _hits_edges),
+        ("pagerank_part_supplier", _part_supplier_edges),
+    ):
+        clear_caches(spark)
+        _rows(spark, name)
+        rel = builder(spark, SF_DIR)
+        # a second execution must hit the same entry, not re-insert
+        _rows(spark, name)
+        assert builder(spark, SF_DIR) is rel
+        assert_memo_round_trip(spark, builder, SF_DIR)

@@ -1,13 +1,12 @@
-"""Round-10 pins: the exact-cents conversion wave's midpoint devices, the
-two round-9 advisor items (Benford negative totals, OLS BIGINT overflow
-on multi-decade spans), and the session-cache LRU-of-applications cap.
+"""Round-10 pins: the exact-cents conversion wave's midpoint devices and
+the two round-9 advisor items (Benford negative totals, OLS BIGINT
+overflow on multi-decade spans).
 """
 
 from __future__ import annotations
 
 import duckdb
 import pytest
-from pyspark.sql import functions as F
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
 from tests.conftest import assert_oracle_match
@@ -251,14 +250,6 @@ def test_price_elasticity_excludes_log_domain_violations(spark, tmp_path):
     assert df.collect()[0].n_lines == 2  # only the two in-domain lines
 
 
-# ---------------------------------------------------------------------------
-# Session-cache LRU-of-applications cap (round-9 advisor nit 7): a process
-# that drives plan functions across many sessions and never constructs
-# Pipeline must not grow the memo registry without bound — entries of the
-# least-recently-used application beyond _MAX_APPS are evicted (and a pure
-# build() makes eviction of a live app correctness-neutral: next touch
-# rebuilds).
-# ---------------------------------------------------------------------------
 def test_fake_decode_null_payload_yields_null_features():
     """Probe finds 22-24 (NULL document bodies = absent blobs): the decode
     kernel must emit NULL byte/hash/dim features — mirroring the SQL
@@ -285,31 +276,3 @@ def test_fake_decode_null_payload_yields_null_features():
     assert r0["content_hash"] is None
     assert r0["channels"] == 3  # kind-derived, payload-independent
     assert out.iloc[1]["n_bytes"] == 2
-
-
-def test_app_lru_cap_evicts_stalest_application(spark, monkeypatch):
-    from etl_pipeline_spark.utils import session_cache as sc
-
-    cache = sc.register_cache({})
-    current = {"app": ""}
-    monkeypatch.setattr(sc, "session_key", lambda s: current["app"])
-    monkeypatch.setattr(sc, "_APP_LRU", {})
-    n_apps = sc._MAX_APPS + 3
-    for i in range(n_apps):
-        current["app"] = f"fake-app-{i}"
-        sc.memoized_relation(
-            cache, spark, ("edge",),
-            lambda: spark.range(5).withColumn("y", F.col("id") * 2),
-        )
-    kept = {f"fake-app-{i}" for i in range(n_apps - sc._MAX_APPS, n_apps)}
-    assert set(sc._APP_LRU) == kept
-    assert {k[0] for k in cache} == kept
-    # touching an old (evicted) app again just rebuilds — pure build()
-    current["app"] = "fake-app-0"
-    got = sc.memoized_relation(
-        cache, spark, ("edge",),
-        lambda: spark.range(5).withColumn("y", F.col("id") * 2),
-    )
-    assert got.count() == 5
-    sc.clear_caches()
-    assert not cache and not sc._APP_LRU

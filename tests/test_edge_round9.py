@@ -1,21 +1,13 @@
-"""Round-9 hardening pins: session-cache race + lifecycle, the explicit
-pagerank caller_cached contract, the AQE cached-plan-width guard, and
-Decimal-rounding totality over extreme doubles (round-8 advisor items).
+"""Round-9 hardening pins: the explicit pagerank caller_cached contract,
+the AQE cached-plan-width guard, and Decimal-rounding totality over
+extreme doubles (round-8 advisor items).
 """
 
 from __future__ import annotations
 
-import threading
-
-import pytest
 from pyspark.sql import functions as F
 
-from etl_pipeline_spark.utils.session_cache import (
-    clear_caches,
-    memoized_relation,
-    register_cache,
-    session_key,
-)
+from etl_pipeline_spark.utils.session_cache import clear_caches
 
 
 def test_round6_total_over_extreme_doubles(spark):
@@ -31,71 +23,6 @@ def test_round6_total_over_extreme_doubles(spark):
     )
     for row in df.collect():
         assert _round6(row.x) == row.r, row.x
-
-
-def test_memoized_relation_concurrent_single_winner(spark):
-    """Two threads racing the same memo key must settle on ONE cache entry,
-    and — because a pure build() makes the racers plan-identical, so the
-    CacheManager dedupes both persist() calls into one entry — the losing
-    thread must NOT unpersist (that would evict the winner's storage, the
-    same sameResult hazard pagerank had). The winner stays persisted."""
-    cache = register_cache({})
-    built: list = []
-    barrier = threading.Barrier(2)
-    results: list = []
-
-    def build():
-        df = spark.range(50).withColumn("y", F.col("id") + 1)
-        built.append(df)
-        return df
-
-    def worker():
-        barrier.wait()
-        results.append(memoized_relation(cache, spark, ("race",), build))
-
-    threads = [threading.Thread(target=worker) for _ in range(2)]
-    for t in threads:
-        t.start()
-    for t in threads:
-        t.join()
-
-    assert len(results) == 2 and results[0] is results[1]
-    key = (session_key(spark), "race")
-    assert list(cache) == [key]
-    winner = cache[key]
-    assert winner.storageLevel.useMemory or winner.storageLevel.useDisk
-    clear_caches(spark)
-    assert cache == {}
-    assert not (winner.storageLevel.useMemory or winner.storageLevel.useDisk)
-
-
-def test_memoized_relation_race_distinct_plan_loser_is_released(spark):
-    """The impure-build escape hatch: when a racing loser's plan is
-    genuinely distinct (no CacheManager dedup), its persisted entry is a
-    real leak and memoized_relation releases it."""
-    cache = register_cache({})
-    key = (session_key(spark), "race-distinct")
-    winner_holder: list = []
-    loser_holder: list = []
-
-    def build():
-        # simulate the other thread winning WHILE this build runs (after
-        # the initial cache miss, before the setdefault)
-        w = spark.range(7).persist()
-        w.count()
-        cache[key] = w
-        winner_holder.append(w)
-        df = spark.range(8)  # DIFFERENT plan from the winner
-        loser_holder.append(df)
-        return df
-
-    got = memoized_relation(cache, spark, ("race-distinct",), build)
-    (winner,) = winner_holder
-    assert got is winner
-    (loser,) = loser_holder
-    assert not (loser.storageLevel.useMemory or loser.storageLevel.useDisk)
-    assert winner.storageLevel.useMemory  # untouched
-    clear_caches(spark)
 
 
 def test_pagerank_explicit_caller_cached(spark):
@@ -145,48 +72,3 @@ def test_cached_edge_relation_stores_at_aqe_width(spark):
         "AQE cached-plan coalescing is not taking effect"
     )
     clear_caches(spark)
-
-
-def test_pipeline_run_clears_session_memos(spark, tmp_path):
-    """Pipeline.run teardown contract (round-9): on exit it releases every
-    relation the run's session memoized, so a long-lived service embedding
-    the package gets bounded executor storage without calling
-    clear_caches itself."""
-    from etl_pipeline_spark.pipeline import Pipeline, PipelineConfig
-
-    cache = register_cache({})
-    rel = memoized_relation(
-        cache, spark, ("pipeline-teardown",), lambda: spark.range(10).withColumn("z", F.lit(1))
-    )
-    rel.count()
-    key = (session_key(spark), "pipeline-teardown")
-    assert key in cache
-    cfg = PipelineConfig(landing_dir=str(tmp_path / "landing"), production_db="prod_teardown")
-    try:
-        Pipeline(spark, cfg).run([])  # no sources — teardown still runs
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS prod_teardown CASCADE")
-    assert key not in cache
-    assert not (rel.storageLevel.useMemory or rel.storageLevel.useDisk)
-
-
-def test_pipeline_run_clears_memos_even_on_error(spark, tmp_path):
-    """The teardown is a finally: a run that dies outside the per-source
-    containment still releases the session memos."""
-    from etl_pipeline_spark.pipeline import Pipeline, PipelineConfig
-
-    cache = register_cache({})
-    rel = memoized_relation(
-        cache, spark, ("pipeline-teardown-err",), lambda: spark.range(5)
-    )
-    rel.count()
-    key = (session_key(spark), "pipeline-teardown-err")
-    cfg = PipelineConfig(landing_dir=str(tmp_path / "landing"), production_db="prod_teardown_e")
-    pipe = Pipeline(spark, cfg)
-    try:
-        with pytest.raises(TypeError):
-            pipe.run(None)  # not iterable — raises inside _run_sources
-    finally:
-        spark.sql("DROP DATABASE IF EXISTS prod_teardown_e CASCADE")
-    assert key not in cache
-    assert not (rel.storageLevel.useMemory or rel.storageLevel.useDisk)
