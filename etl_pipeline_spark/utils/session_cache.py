@@ -111,8 +111,9 @@ def memoized_relation(cache: dict, spark: SparkSession, extra_key: tuple, build)
             del _APP_LRU[app]
             for c in _CACHES:
                 stale.extend(c.pop(k) for k in list(c) if k[0] == app)
+        shared = _context_frames(evict) if stale else []
         got = cache.get(key)
-    _unpersist_values(stale)
+    _unpersist_values(stale, shared)
     if got is not None:
         return got
     # build outside the lock (a slow build must not serialize unrelated
@@ -159,41 +160,68 @@ def session_memo(build):
     return memo
 
 
-def _unpersist_values(values: list) -> None:
+def _frames(value) -> tuple:
+    members = value if isinstance(value, tuple) else (value,)
+    return tuple(v for v in members if isinstance(v, DataFrame))
+
+
+def _plan(df: DataFrame):
+    return df._jdf.queryExecution().analyzed()
+
+
+def _context_frames(dropped: list[str]) -> list[DataFrame]:
+    """DataFrames that remaining entries of other sessions of the same
+    SparkContexts hold (the caller holds ``_LOCK`` and has already popped
+    the ``dropped`` sessions' entries)."""
+    apps = {sid.split("/")[0] for sid in dropped}
+    return [
+        df
+        for c in _CACHES
+        for key, val in c.items()
+        if key[0].split("/")[0] in apps
+        for df in _frames(val)
+    ]
+
+
+def _unpersist_values(values: list, shared: list[DataFrame]) -> None:
     """Best-effort unpersist of popped memo values (DataFrames or tuples
-    of them); a stopped session just means the blocks are already gone."""
+    of them); a stopped session just means the blocks are already gone.
+
+    The sessions of one SparkContext share its CacheManager, which keeps
+    ONE entry for plan-identical relations: unpersisting a popped relation
+    would uncache a plan-identical one that another session's entry in
+    ``shared`` still returns, so such a relation is left cached."""
     for val in values:
-        members = val if isinstance(val, tuple) else (val,)
-        for v in members:
-            if isinstance(v, DataFrame):
-                try:
+        for v in _frames(val):
+            try:
+                if not any(_plan(v).sameResult(_plan(s)) for s in shared):
                     v.unpersist()
-                except Exception:  # noqa: BLE001 — session already stopped
-                    pass
+            except Exception:  # noqa: BLE001 — session already stopped
+                pass
 
 
 def clear_caches(spark: SparkSession | None = None) -> int:
     """Unpersist and evict memoized relations; returns entries dropped.
 
     With ``spark`` given, only that session's entries (cache keys lead
-    with ``session_key(spark)``); with ``None``, everything.
+    with ``session_key(spark)``) — a relation another session of the same
+    context still holds stays cached; with ``None``, everything.
     """
     sid = None if spark is None else session_key(spark)
-    dropped = 0
-    for cache in _CACHES:
-        with _LOCK:
-            popped = [
-                cache.pop(key)
-                for key in list(cache)
-                if sid is None or key[0] == sid
-            ]
-            if sid is None:
-                _APP_LRU.clear()
-            else:
-                _APP_LRU.pop(sid, None)
-        _unpersist_values(popped)
-        dropped += len(popped)
-    return dropped
+    with _LOCK:
+        popped = [
+            cache.pop(key)
+            for cache in _CACHES
+            for key in list(cache)
+            if sid is None or key[0] == sid
+        ]
+        if sid is None:
+            _APP_LRU.clear()
+        else:
+            _APP_LRU.pop(sid, None)
+        shared = [] if sid is None else _context_frames([sid])
+    _unpersist_values(popped, shared)
+    return len(popped)
 
 
 # release whatever the last workloads left pinned when the interpreter

@@ -22,6 +22,7 @@ spark = (
 spark.sparkContext.setLogLevel("ERROR")
 
 import __spark_entry__ as e
+from tests.conftest import canonicalize
 
 out = e.entry(spark)
 rows = out.collect()
@@ -35,11 +36,7 @@ for t in ["region","nation","customer","supplier","part","orders","lineitem","ev
 
 
 def vhash(df: pd.DataFrame) -> str:
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        df[c] = df[c].astype(str)
-    df = df.sort_values(by=list(df.columns), kind="mergesort").reset_index(drop=True)
-    return hashlib.md5(df.to_csv(index=False).encode()).hexdigest()
+    return hashlib.md5(canonicalize(df).to_csv(index=False).encode()).hexdigest()
 
 
 qs, os_ = e.queries(), e.oracle_sql()

@@ -16,6 +16,9 @@ letter rotations, so beyond 10 replicas document text repeats across
 replica groups — factors > 10 are for FACT-table queries (TPC-H,
 events, embeddings-by-id); document-corpus queries should stay at 8x.
 
+Each side is ``measure.time_query``'s best of 2 passes, session memos and
+CacheManager cleared before each.
+
 Usage: [SPARK_GRAFT_SCALE_FACTOR=N] python scripts/measure_scaling.py [query ...]
 """
 
@@ -23,15 +26,14 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 from pathlib import Path
 
 from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
-from etl_pipeline_spark.plans.registry import all_queries  # noqa: E402
 from etl_pipeline_spark.session import get_spark  # noqa: E402
+from etl_pipeline_spark.utils.measure import time_query, warm_up  # noqa: E402
 
 SF_DIR = "/root/testdata/sf0.1"
 REPLICAS = int(os.environ.get("SPARK_GRAFT_SCALE_FACTOR", "8"))
@@ -83,13 +85,6 @@ def replicate(spark, table: str) -> None:
     u.write.mode("overwrite").parquet(str(out))
 
 
-def run_once(spark, qname: str, sf_dir: str) -> float:
-    fn = all_queries()[qname]
-    t0 = time.monotonic()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.monotonic() - t0
-
-
 def main() -> None:
     queries = sys.argv[1:] or DEFAULT_QUERIES
     spark = get_spark("scaling-measure")
@@ -101,11 +96,10 @@ def main() -> None:
             spark.read.parquet(f"{SF_DIR}/{t}.parquet").write.mode(
                 "overwrite"
             ).parquet(str(out))
-    # warm the JVM/codegen once per query, then measure
+    warm_up(spark, SF_DIR)
     for q in queries:
-        run_once(spark, q, SF_DIR)
-        t1 = run_once(spark, q, SF_DIR)
-        t8 = run_once(spark, q, X8_DIR)
+        t1 = time_query(spark, q, SF_DIR)["best_s"]
+        t8 = time_query(spark, q, X8_DIR)["best_s"]
         print(f"{q}: 1x={t1:.2f}s {REPLICAS}x={t8:.2f}s ratio={t8 / t1:.2f}")
 
 

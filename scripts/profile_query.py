@@ -1,17 +1,13 @@
-"""Per-query profiler: run one or more registered queries with the noop
-sink and report per-stage metrics from the UI REST API (guide §1/§7).
+"""Per-query profile: time each named registry query with the bench's
+loop (``etl_pipeline_spark.utils.measure``: best of 2 noop-sink passes,
+session memos and CacheManager cleared before each) and print its record
+and the top stages of its best pass by executor run time — the local
+stand-in for the Stages tab when deciding whether time goes to
+scheduling, compute or shuffle. Needs no Spark UI.
 
 Usage: python scripts/profile_query.py <query> [<query> ...]
   env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1)
-       PROFILE_PLAN_DIR   (write .explain("formatted") per query there)
-       PROFILE_RUNS       (timed runs per query, default 1; best kept)
-       PROFILE_CLEAR=1    (clear session memos + CacheManager before every
-                           run — bench.py's r12 memo-transparent timing)
-
-Prints, per query: wall seconds, job/stage count, and the top stages by
-executor run time with task counts and shuffle bytes — the local stand-in
-for the Stages tab when deciding whether time goes to scheduling, compute
-or shuffle.
+Physical plans: scripts/dump_plans.py.
 """
 
 from __future__ import annotations
@@ -19,103 +15,38 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
-import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
-from etl_pipeline_spark.session import get_spark
-
-
-def _api(port: int, path: str):
-    with urllib.request.urlopen(f"http://localhost:{port}/api/v1/{path}") as r:
-        return json.load(r)
+from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded  # noqa: E402
+from etl_pipeline_spark.session import get_spark  # noqa: E402
+from etl_pipeline_spark.utils import measure  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    plan_dir = os.environ.get("PROFILE_PLAN_DIR")
-    runs = int(os.environ.get("PROFILE_RUNS", "1"))
-    spark = get_spark(
-        app_name="profile-query", extra_conf={"spark.ui.enabled": "true"}
-    )
-    spark.sparkContext.setLogLevel("ERROR")
     _ensure_loaded()
-    port = int(spark.sparkContext.uiWebUrl.rsplit(":", 1)[1])
-    app_id = spark.sparkContext.applicationId
-
     names = sys.argv[1:]
     unknown = [n for n in names if n not in REGISTRY]
     if unknown:
         raise SystemExit(f"unknown queries: {unknown}")
-
-    # codegen warmup
-    REGISTRY["q1_pricing_summary"].spark_fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    clear = os.environ.get("PROFILE_CLEAR") == "1"
-
-    def _reset() -> None:
-        if clear:
-            from etl_pipeline_spark.utils.session_cache import clear_caches
-
-            clear_caches(spark)
-            spark.catalog.clearCache()
-
+    spark = get_spark(app_name="profile-query")
+    spark.sparkContext.setLogLevel("ERROR")
+    measure.warm_up(spark, sf_dir)
     for name in names:
-        fn = REGISTRY[name].spark_fn
-        spark.sparkContext.setJobDescription(f"warm:{name}")
-        _reset()
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        warm = time.perf_counter() - t0
-        if plan_dir:
-            os.makedirs(plan_dir, exist_ok=True)
-            with open(os.path.join(plan_dir, f"{name}.txt"), "w") as f:
-                f.write(fn(spark, sf_dir)._jdf.queryExecution().explainString(
-                    spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
-                        "formatted"
-                    )
-                ))
-        jobs_before = {j["jobId"] for j in _api(port, f"applications/{app_id}/jobs")}
-        best = None
-        for _ in range(runs):
-            spark.sparkContext.setJobDescription(f"timed:{name}")
-            _reset()
-            t0 = time.perf_counter()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            dt = time.perf_counter() - t0
-            best = dt if best is None else min(best, dt)
-        jobs = [
-            j
-            for j in _api(port, f"applications/{app_id}/jobs")
-            if j["jobId"] not in jobs_before
-        ]
-        stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-        stages = []
-        for s in _api(port, f"applications/{app_id}/stages"):
-            if s["stageId"] in stage_ids and s["status"] in ("COMPLETE", "SKIPPED"):
-                stages.append(s)
-        total_run = sum(s.get("executorRunTime", 0) for s in stages)
-        print(
-            f"\n=== {name}: warm {warm:.2f}s best {best:.2f}s "
-            f"jobs={len(jobs)} stages={len(stages)} "
-            f"executorRunTime={total_run/1000.0:.2f}s"
-        )
-        top = sorted(stages, key=lambda s: -s.get("executorRunTime", 0))[:12]
-        for s in top:
+        passes = measure.run_passes(spark, name, sf_dir)
+        rec = {
+            k: [round(w, 3) for w in v] if k == "walls" else round(v, 3)
+            for k, v in measure.record(passes).items()
+        }
+        print(f"\n=== {name}: {json.dumps(rec)}")
+        stages = measure.best_pass(passes).stages
+        for s in sorted(stages, key=lambda s: -s.run_s)[:12]:
             print(
-                f"  stage {s['stageId']:>4} {s['status'][:4]} "
-                f"tasks={s['numCompleteTasks']:>3} "
-                f"run={s.get('executorRunTime', 0)/1000.0:6.2f}s "
-                f"cpu={s.get('executorCpuTime', 0)/1e9:6.2f}s "
-                f"shR={s.get('shuffleReadBytes', 0)>>10:>6}K "
-                f"shW={s.get('shuffleWriteBytes', 0)>>10:>6}K "
-                f"in={s.get('inputBytes', 0)>>10:>6}K  "
-                f"{s['name'].splitlines()[0][:70]}"
+                f"  stage {s.id:>4} {s.status[:4]} tasks={s.tasks:>3}"
+                f" run={s.run_s:6.2f}s cpu={s.cpu_s:6.2f}s"
+                f" shR={s.shuffle_read_b >> 10:>6}K shW={s.shuffle_write_b >> 10:>6}K"
+                f" spill={s.spill_b >> 10:>6}K  {s.name.splitlines()[0][:70]}"
             )
 
 

@@ -5,17 +5,19 @@ insensitive value comparison)."""
 from __future__ import annotations
 
 import os
-import time
-import uuid
 
 import duckdb
 import pandas as pd
 import pytest
+from pyspark.sql import functions as F
 
 from etl_pipeline_spark.session import get_spark
 from etl_pipeline_spark.sources.star import TABLES
+from etl_pipeline_spark.utils.measure import jobs_fired
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.01")
+# the sf0.001 fixture next to SF_DIR: for tests that run a query end to end
+SF_TINY_DIR = os.path.join(os.path.dirname(SF_DIR), "sf0.001")
 
 
 @pytest.fixture(scope="session")
@@ -66,33 +68,42 @@ def assert_oracle_match(spark_df, duck_con, oracle: str, name: str = "query") ->
     )
 
 
-def _in_job_group(spark, group: str, action) -> None:
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        action()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-        sc.setLocalProperty("spark.job.interruptOnCancel", None)
+# column types of the one-table fixtures, as the star loader reads them;
+# each table's date column is given as a string and written as TIMESTAMP_NTZ
+TABLE_SCHEMAS = {
+    "orders": (
+        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
+        " o_totalprice double, o_orderdate string, o_orderpriority string"
+    ),
+    "lineitem": (
+        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
+        " l_linenumber int, l_quantity double, l_extendedprice double,"
+        " l_discount double, l_tax double, l_returnflag string,"
+        " l_linestatus string, l_shipdate string"
+    ),
+    "events": (
+        "event_id bigint, ts string, user_id bigint, event_type string,"
+        " value double, props string"
+    ),
+}
+_NTZ_COLUMN = {"orders": "o_orderdate", "lineitem": "l_shipdate", "events": "ts"}
 
 
-def jobs_fired(spark, action) -> list[int]:
-    """Run ``action`` in its own job group and return the ids of the jobs
-    ``statusTracker`` lists for it.
+def write_table(spark, tmp_path, table: str, rows, schema: str | None = None):
+    """Write ``rows`` as the one-file parquet table ``<tmp_path>/<table>.parquet``
+    and return ``(str(tmp_path), DuckDB connection with a view of it)``.
 
-    Control: a one-task job in a later group. Job events reach the status
-    store in order, so once it shows the control job, every job of the
-    earlier group is listed too."""
-    tracker = spark.sparkContext.statusTracker()
-    group, control = f"count-{uuid.uuid4().hex}", f"control-{uuid.uuid4().hex}"
-    _in_job_group(spark, group, action)
-    _in_job_group(spark, control, lambda: spark.sparkContext.parallelize([0], 1).count())
-    deadline = time.monotonic() + 30
-    while not tracker.getJobIdsForGroup(control) and time.monotonic() < deadline:
-        time.sleep(0.05)
-    assert tracker.getJobIdsForGroup(control), "control job never reached the status store"
-    return sorted(tracker.getJobIdsForGroup(group))
+    Without ``schema`` the rows take ``TABLE_SCHEMAS[table]`` and the date
+    column is cast to TIMESTAMP_NTZ; a given ``schema`` is written as is."""
+    df = spark.createDataFrame(rows, schema or TABLE_SCHEMAS[table])
+    if schema is None:
+        ts = _NTZ_COLUMN[table]
+        df = df.withColumn(ts, F.col(ts).cast("timestamp_ntz"))
+    path = tmp_path / f"{table}.parquet"
+    df.coalesce(1).write.parquet(str(path))
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW {table} AS SELECT * FROM read_parquet('{path}/*.parquet')")
+    return str(tmp_path), con
 
 
 def assert_fires_no_job(spark, action) -> None:

@@ -9,7 +9,7 @@ import duckdb
 import pytest
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
-from tests.conftest import assert_oracle_match
+from tests.conftest import assert_oracle_match, write_table
 
 _ensure_loaded()
 
@@ -22,20 +22,6 @@ def _duck_for(tmpdir, tables):
             f" read_parquet('{tmpdir}/{t}.parquet/*.parquet')"
         )
     return con
-
-
-def _write_orders(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate string, o_orderpriority string",
-    ).selectExpr(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "CAST(o_orderdate AS TIMESTAMP_NTZ) AS o_orderdate",
-        "o_orderpriority",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    return str(tmp_path), df
 
 
 # ---------------------------------------------------------------------------
@@ -53,10 +39,9 @@ def test_benford_negative_totals_analyze_magnitude(spark, tmp_path):
         (4, 1, "O", 0.00, "1995-01-04", "1-URGENT"),    # excluded (r9 pin)
         (5, 1, "O", 523.45, "1995-01-05", "1-URGENT"),  # digit 5
     ]
-    sf, _ = _write_orders(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "orders", rows)
     spec = REGISTRY["benford_first_digit"]
     df = spec.spark_fn(spark, sf)  # must not crash under ANSI
-    con = _duck_for(sf, ["orders"])
     assert_oracle_match(df, con, spec.oracle, "benford_negative_edge")
     got = {r.digit: r.n_orders for r in df.collect()}
     assert got == {5: 2, 1: 1}
@@ -81,10 +66,9 @@ def test_theil_sen_ols_multidecade_span_no_overflow(spark, tmp_path):
         )
         for m in range(480)
     ]
-    sf, _ = _write_orders(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "orders", rows)
     spec = REGISTRY["theil_sen_price_trend"]
     df = spec.spark_fn(spark, sf)  # old form: ANSI BIGINT overflow here
-    con = _duck_for(sf, ["orders"])
     assert_oracle_match(df, con, spec.oracle, "theil_sen_multidecade_edge")
     row = df.collect()[0]
     assert row.n_months == 480
@@ -106,15 +90,13 @@ def test_conditional_avg_exact_half_cent_midpoint(spark, tmp_path):
         (3, 1, "O", 9.99, "1995-01-03", "1-URGENT"),
         (4, 1, "O", 5.00, "1995-01-04", "2-HIGH"),  # no 'F' in this group
     ]
-    _, df = _write_orders(spark, tmp_path, rows)
-    df.createOrReplaceTempView("orders")
+    sf, con = write_table(spark, tmp_path, "orders", rows)
+    spark.read.parquet(f"{sf}/orders.parquet").createOrReplaceTempView("orders")
     sql = REGISTRY["sql_conditional_agg_filter"].oracle
     got = {
         r.o_orderpriority: r.avg_finished_price
         for r in spark.sql(sql).collect()
     }
-    con = duckdb.connect()
-    con.register("orders", df.toPandas())
     want = {
         r[0]: r[3]
         for r in con.execute(sql).fetchall()
@@ -132,12 +114,10 @@ def test_monthly_ma3_exact_half_cent_midpoint(spark, tmp_path):
         (1, 1, "F", 1.00, "1995-01-15", "1-URGENT"),
         (2, 1, "F", 1.01, "1995-02-15", "1-URGENT"),
     ]
-    _, df = _write_orders(spark, tmp_path, rows)
-    df.createOrReplaceTempView("orders")
+    sf, con = write_table(spark, tmp_path, "orders", rows)
+    spark.read.parquet(f"{sf}/orders.parquet").createOrReplaceTempView("orders")
     sql = REGISTRY["sql_monthly_revenue_ma3"].oracle
     got = {r.ym: r.revenue_ma3 for r in spark.sql(sql).collect()}
-    con = duckdb.connect()
-    con.register("orders", df.toPandas())
     want = {r[0]: r[2] for r in con.execute(sql).fetchall()}
     assert got == want == {199501: 1.0, 199502: 1.01}
 
@@ -161,12 +141,10 @@ def test_iqr_fence_exact_half_cent_midpoint(spark, tmp_path):
         (4, 1, "F", 10.01, "1995-01-04", "1-URGENT"),
         (5, 1, "F", 50.00, "1995-01-05", "1-URGENT"),
     ]
-    _, df = _write_orders(spark, tmp_path, rows)
-    df.createOrReplaceTempView("orders")
+    sf, con = write_table(spark, tmp_path, "orders", rows)
+    spark.read.parquet(f"{sf}/orders.parquet").createOrReplaceTempView("orders")
     sql = REGISTRY["sql_outlier_iqr_fences"].oracle
     got = spark.sql(sql).collect()
-    con = duckdb.connect()
-    con.register("orders", df.toPandas())
     want = con.execute(sql).fetchall()
     assert len(got) == len(want) == 1
     assert got[0].upper_fence == want[0][2] == 10.02
@@ -185,23 +163,6 @@ def test_iqr_fence_exact_half_cent_midpoint(spark, tmp_path):
 # adopted sweep plants (lineitem rows 5 and 10) fail pre-fix registry-
 # wide; these direct pins keep the operator-level contract visible.
 # ---------------------------------------------------------------------------
-def _write_lineitem(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
-        " l_linenumber int, l_quantity double, l_extendedprice double,"
-        " l_discount double, l_tax double, l_returnflag string,"
-        " l_linestatus string, l_shipdate string",
-    ).selectExpr(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus",
-        "CAST(l_shipdate AS TIMESTAMP_NTZ) AS l_shipdate",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
-
-
 def test_partsupp_proxy_skips_zero_quantity_lines(spark, tmp_path):
     from etl_pipeline_spark.plans.tpch_extended import _partsupp
 
@@ -210,7 +171,7 @@ def test_partsupp_proxy_skips_zero_quantity_lines(spark, tmp_path):
         (1, 1, 1, 2, 0.0, 55.00, 0.0, 0.0, "N", "O", "1995-01-02"),  # free
         (2, 2, 2, 1, 0.0, 0.00, 0.0, 0.0, "N", "O", "1995-01-03"),  # only
     ]
-    sf = _write_lineitem(spark, tmp_path, rows)
+    sf, _ = write_table(spark, tmp_path, "lineitem", rows)
     got = {(r.ps_partkey, r.ps_suppkey): r for r in _partsupp(spark, sf).collect()}
     # the all-zero-qty (2,2) group has no unit cost and drops out
     assert set(got) == {(1, 1)}
@@ -224,10 +185,9 @@ def test_vshape_drops_zero_quantity_month(spark, tmp_path):
         (2, 1, 1, 1, 0.0, 77.00, 0.0, 0.0, "N", "O", "1995-02-10"),  # qty-0
         (3, 1, 1, 1, 10.0, 50.00, 0.0, 0.0, "N", "O", "1995-03-10"),
     ]
-    sf = _write_lineitem(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "lineitem", rows)
     spec = REGISTRY["pattern_vshape_prices"]
     df = spec.spark_fn(spark, sf)  # pre-fix: ANSI DIVIDE_BY_ZERO here
-    con = _duck_for(sf, ["lineitem"])
     assert_oracle_match(df, con, spec.oracle, "vshape_zero_qty_edge")
 
 
@@ -238,7 +198,7 @@ def test_price_elasticity_excludes_log_domain_violations(spark, tmp_path):
         (3, 1, 1, 1, 5.0, 0.00, 0.0, 0.0, "N", "O", "1995-01-12"),  # price-0
         (4, 1, 1, 1, 4.0, 120.00, 0.0, 0.0, "N", "O", "1995-01-13"),
     ]
-    sf = _write_lineitem(spark, tmp_path, rows)
+    sf, _ = write_table(spark, tmp_path, "lineitem", rows)
     part = spark.createDataFrame(
         [(1, "BRAND_1")], "p_partkey bigint, p_brand string"
     )

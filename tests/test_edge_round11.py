@@ -14,34 +14,10 @@ both engines.
 
 from __future__ import annotations
 
-import duckdb
-
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
-from tests.conftest import assert_oracle_match
+from tests.conftest import assert_oracle_match, write_table
 
 _ensure_loaded()
-
-
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id bigint, ts string, user_id bigint, event_type string,"
-        " value double, props string",
-    ).selectExpr(
-        "event_id",
-        "CAST(ts AS TIMESTAMP_NTZ) AS ts",
-        "user_id",
-        "event_type",
-        "value",
-        "props",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM"
-        f" read_parquet('{tmp_path}/events.parquet/*.parquet')"
-    )
-    return str(tmp_path), con
 
 
 def test_runs_test_zero_variance_n1_eq_n2_eq_1(spark, tmp_path):
@@ -55,31 +31,13 @@ def test_runs_test_zero_variance_n1_eq_n2_eq_1(spark, tmp_path):
         (3, "2024-01-09 12:00:00", 3, "purchase", -646.19, "{}"),
         (4, "2024-01-09 13:00:00", 3, "view", 10.0, "{}"),  # non-purchase noise
     ]
-    sf, con = _write_events(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "events", rows)
     spec = REGISTRY["runs_test_daily_revenue"]
     df = spec.spark_fn(spark, sf)  # must not crash under ANSI
     out = df.collect()[0]
     assert out["n_above"] == 1 and out["n_below"] == 1
     assert out["z"] is None and out["reject_05"] == 0
     assert_oracle_match(df, con, spec.oracle, "runs_test_zero_variance")
-
-
-def _write_orders(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate string, o_orderpriority string",
-    ).selectExpr(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "CAST(o_orderdate AS TIMESTAMP_NTZ) AS o_orderdate", "o_orderpriority",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM"
-        f" read_parquet('{tmp_path}/orders.parquet/*.parquet')"
-    )
-    return str(tmp_path), con
 
 
 def test_acf_constant_series_is_null_not_zero_divide(spark, tmp_path):
@@ -91,7 +49,7 @@ def test_acf_constant_series_is_null_not_zero_divide(spark, tmp_path):
         (i + 1, 1, "F", 100.00, f"1995-01-{i + 1:02d} 00:00:00", "1-URGENT")
         for i in range(10)
     ]
-    sf, con = _write_orders(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "orders", rows)
     spec = REGISTRY["acf_daily_revenue"]
     df = spec.spark_fn(spark, sf)  # must not crash under ANSI
     assert all(r["acf"] is None for r in df.collect())
@@ -107,7 +65,7 @@ def test_runs_test_all_days_at_median(spark, tmp_path):
         (2, "2024-01-05 11:00:00", 2, "purchase", 100.0, "{}"),
         (3, "2024-01-09 12:00:00", 3, "purchase", 100.0, "{}"),
     ]
-    sf, con = _write_events(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "events", rows)
     spec = REGISTRY["runs_test_daily_revenue"]
     df = spec.spark_fn(spark, sf)
     out = df.collect()[0]

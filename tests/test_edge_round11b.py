@@ -33,27 +33,9 @@ import duckdb
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
 from etl_pipeline_spark.sources.embeddings import load_embeddings
-from tests.conftest import assert_oracle_match
+from tests.conftest import assert_oracle_match, write_table
 
 _ensure_loaded()
-
-
-def _write_events(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "event_id bigint, ts string, user_id bigint, event_type string,"
-        " value double, props string",
-    ).selectExpr(
-        "event_id", "CAST(ts AS TIMESTAMP_NTZ) AS ts", "user_id",
-        "event_type", "value", "props",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "events.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW events AS SELECT * FROM"
-        f" read_parquet('{tmp_path}/events.parquet/*.parquet')"
-    )
-    return str(tmp_path), con
 
 
 HOSTILE_PROPS = [
@@ -76,7 +58,7 @@ def test_json_extract_props_hostile_payloads(spark, tmp_path):
         (99, "2024-01-02 11:00:00", 2, "view", 1.0, '{"k": "90"}'),
         (100, "2024-01-02 12:00:00", 2, "view", 1.0, '{"k": 7}'),
     ]
-    sf, con = _write_events(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "events", rows)
     spec = REGISTRY["json_extract_props"]
     df = spec.spark_fn(spark, sf)  # must not crash under ANSI
     got = {r["event_id"]: r["k_value"] for r in df.collect()}
@@ -148,7 +130,7 @@ def test_zscore_zero_sigma_group_is_null(spark, tmp_path):
         (5, "2024-01-02 11:00:00", 2, "click", 3.0, "{}"),
         (6, "2024-01-03 10:00:00", 3, "purchase", 9.0, "{}"),
     ]
-    sf, con = _write_events(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "events", rows)
     spec = REGISTRY["sql_zscore_normalize_events"]
     # the shared-text SQL surface runs the SAME string in both engines
     df = spec.spark_fn(spark, sf)  # must not crash under ANSI

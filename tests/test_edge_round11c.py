@@ -34,29 +34,10 @@ import duckdb
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
 from etl_pipeline_spark.sources.embeddings import load_labeled_embeddings
-from tests.conftest import assert_oracle_match
-from tests.test_edge_round11b import _write_embeddings, _write_events
+from tests.conftest import assert_oracle_match, write_table
+from tests.test_edge_round11b import _write_embeddings
 
 _ensure_loaded()
-
-
-def _write_orders(spark, tmp_path, rows):
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate string, o_orderpriority string",
-    ).selectExpr(
-        "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice",
-        "CAST(o_orderdate AS TIMESTAMP_NTZ) AS o_orderdate",
-        "o_orderpriority",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    con = duckdb.connect()
-    con.execute(
-        "CREATE VIEW orders AS SELECT * FROM"
-        f" read_parquet('{tmp_path}/orders.parquet/*.parquet')"
-    )
-    return str(tmp_path), con
 
 
 def test_undated_order_leaves_the_daily_series(spark, tmp_path):
@@ -70,7 +51,7 @@ def test_undated_order_leaves_the_daily_series(spark, tmp_path):
         (4, 2, "F", 400.0, "1996-01-04", "2-HIGH"),
         (9, 3, "O", 999.0, None, "3-MEDIUM"),
     ]
-    sf, con = _write_orders(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "orders", rows)
     spec = REGISTRY["ewma_control_chart_daily"]
     df = spec.spark_fn(spark, sf)
     got = {r["day_epoch"] for r in df.collect()}
@@ -140,7 +121,7 @@ def test_null_ts_event_opens_no_session(spark, tmp_path):
         (3, None, 1, "view", 3.0, "{}"),
         (4, "2024-01-01 12:00:00", 1, "view", 4.0, "{}"),
     ]
-    sf, con = _write_events(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "events", rows)
     spec = REGISTRY["events_sessionize_30m"]
     df = spec.spark_fn(spark, sf)
     assert df.count() == 2  # two real sessions, no NULL-ts session
@@ -156,7 +137,7 @@ def test_keep_first_orders_nulls_last_in_both_engines(spark, tmp_path):
         (11, 1, "O", 200.0, "1996-06-01", "1-URGENT"),
         (20, 2, "O", 300.0, None, "2-HIGH"),
     ]
-    sf, con = _write_orders(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "orders", rows)
     spec = REGISTRY["sql_keep_first_per_key"]
     # shared-text surface: the SAME string runs in both engines
     df = spec.spark_fn(spark, sf)
@@ -174,7 +155,7 @@ def test_hash_sentinel_gives_null_group_one_draw(spark, tmp_path):
         (2, "2024-01-01 11:00:00", 1, None, 2.0, "{}"),
         (3, "2024-01-01 12:00:00", 2, None, 3.0, "{}"),
     ]
-    sf, con = _write_events(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "events", rows)
     spec = REGISTRY["dp_noisy_counts_laplace"]
     df = spec.spark_fn(spark, sf)
     rows_out = {r["event_type"]: r for r in df.collect()}
@@ -209,7 +190,7 @@ def test_snapshot_diff_null_status_is_unchanged(spark, tmp_path):
         (1, 1, None, 100.0, "1996-01-01", "1-URGENT"),
         (2, 1, "O", 200.0, "1996-01-02", "1-URGENT"),
     ]
-    sf, con = _write_orders(spark, tmp_path, rows)
+    sf, con = write_table(spark, tmp_path, "orders", rows)
     spec = REGISTRY["snapshot_diff_orders"]
     df = spec.spark_fn(spark, sf)
     got = {r["o_orderkey"]: r["status"] for r in df.collect()}

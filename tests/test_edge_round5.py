@@ -10,11 +10,16 @@ import duckdb
 import pytest
 
 from etl_pipeline_spark.plans.registry import REGISTRY, _ensure_loaded
-from tests.conftest import assert_oracle_match
+from tests.conftest import assert_oracle_match, write_table
 
 _ensure_loaded()
 
 _DAY_NS = 86_400_000_000_000
+# events with ts as raw epoch nanoseconds, not a timestamp
+_EVENTS_NS = (
+    "event_id bigint, ts bigint, user_id bigint,"
+    " event_type string, value double, props string"
+)
 
 
 def _duck_for(tmpdir, tables):
@@ -38,14 +43,7 @@ def edge_events(spark, tmp_path):
         (2, 10 * _DAY_NS, 1, "view", 1.0, "{}"),
         (3, 40 * _DAY_NS, 2, "view", 1.0, "{}"),
     ]
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "events", rows, _EVENTS_NS)
 
 
 def test_kaplan_meier_zero_survival_branch_parity(spark, edge_events):
@@ -53,8 +51,8 @@ def test_kaplan_meier_zero_survival_branch_parity(spark, edge_events):
     exactly 0.0 in BOTH engines (Spark LN(0) is NULL, DuckDB -inf — the
     cumulative dead-flag guard is what keeps them identical)."""
     spec = REGISTRY["kaplan_meier_retention"]
-    df = spec.spark_fn(spark, edge_events)
-    con = _duck_for(edge_events, ["events"])
+    sf, con = edge_events
+    df = spec.spark_fn(spark, sf)
     # duckdb epoch_ns() needs a timestamp column; the synthetic table
     # ships ts as raw ns, so adapt the oracle's accessor
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
@@ -73,28 +71,15 @@ def edge_orders(spark, tmp_path):
         (2, 7, "O", 300.0, "1995-01-02", "1-URGENT"),
         (3, 7, "O", 200.0, "1995-01-03", "1-URGENT"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "o_orderkey bigint, o_custkey bigint, o_orderstatus string,"
-        " o_totalprice double, o_orderdate string, o_orderpriority string",
-    ).selectExpr(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderstatus",
-        "o_totalprice",
-        "CAST(o_orderdate AS TIMESTAMP_NTZ) AS o_orderdate",
-        "o_orderpriority",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "orders.parquet"))
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "orders", rows)
 
 
 def test_acf_series_shorter_than_max_lag_parity(spark, edge_orders):
     """With 3 days, lags 3..7 have zero pairs: both engines must emit
     ONLY lags 1-2 (no null-acf rows, no division by empty sums)."""
     spec = REGISTRY["acf_daily_revenue"]
-    df = spec.spark_fn(spark, edge_orders)
-    con = _duck_for(edge_orders, ["orders"])
+    sf, con = edge_orders
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "acf_edge")
     lags = {r.lag: r.n_pairs for r in df.collect()}
     assert lags == {1: 2, 2: 1}
@@ -104,8 +89,8 @@ def test_gini_single_customer_parity(spark, edge_orders):
     """One customer owns all revenue: G = 2·1·x/(1·x) − 2/1 = 0 — the
     degenerate-but-defined case."""
     spec = REGISTRY["gini_revenue_concentration"]
-    df = spec.spark_fn(spark, edge_orders)
-    con = _duck_for(edge_orders, ["orders"])
+    sf, con = edge_orders
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "gini_edge")
     row = df.collect()[0]
     assert row.n_customers == 1 and row.gini == 0.0
@@ -119,8 +104,8 @@ def test_ewma_short_series_and_alarm_branch_parity(spark, edge_orders):
     normalizer must renormalize identically in both engines, and day 2
     (300 > 1.5 x 100-EWMA) must fire the alarm exactly once."""
     spec = REGISTRY["ewma_control_chart_daily"]
-    df = spec.spark_fn(spark, edge_orders)
-    con = _duck_for(edge_orders, ["orders"])
+    sf, con = edge_orders
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "ewma_edge")
     rows = sorted(df.collect(), key=lambda r: r.day_epoch)
     assert [r.alarm for r in rows] == [0, 1, 0]
@@ -179,20 +164,13 @@ def edge_purchase_events(spark, tmp_path):
         (7, 4 * _DAY_NS + 5, 2, "purchase", 10.0, "{}"),
         (8, 9 * _DAY_NS, 2, "view", 10.0, "{}"),
     ]
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "events", rows, _EVENTS_NS)
 
 
 def test_purchase_streaks_gap_splits_island_parity(spark, edge_purchase_events):
     spec = REGISTRY["purchase_streaks_histogram"]
-    df = spec.spark_fn(spark, edge_purchase_events)
-    con = _duck_for(edge_purchase_events, ["events"])
+    sf, con = edge_purchase_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "streaks_edge")
     hist = {r.max_streak: r.n_users for r in df.collect()}
@@ -205,8 +183,8 @@ def test_purchase_streaks_no_purchases_is_empty_both_engines(
     """edge_events is views-only: zero purchase rows must yield an
     EMPTY result in both engines (not a null/zero row)."""
     spec = REGISTRY["purchase_streaks_histogram"]
-    df = spec.spark_fn(spark, edge_events)
-    con = _duck_for(edge_events, ["events"])
+    sf, con = edge_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "streaks_empty_edge")
     assert df.count() == 0
@@ -217,8 +195,8 @@ def test_nelson_aalen_terminal_group_parity(spark, edge_events):
     increment is exactly 1.0 — no zero-branch needed (unlike KM's
     product form); Breslow survival = exp(-1)."""
     spec = REGISTRY["nelson_aalen_hazard"]
-    df = spec.spark_fn(spark, edge_events)
-    con = _duck_for(edge_events, ["events"])
+    sf, con = edge_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "na_edge")
     rows = {r.duration_days: r for r in df.collect()}
@@ -238,20 +216,7 @@ def edge_lineitem(spark, tmp_path):
         (1, 2, 1, 3, 1.0, 10.0, 0.0, 0.0, "N", "O", "1995-01-03"),
         (2, 3, 1, 1, 1.0, 10.0, 0.0, 0.0, "N", "O", "1995-01-04"),
     ]
-    df = spark.createDataFrame(
-        rows,
-        "l_orderkey bigint, l_partkey bigint, l_suppkey bigint,"
-        " l_linenumber int, l_quantity double, l_extendedprice double,"
-        " l_discount double, l_tax double, l_returnflag string,"
-        " l_linestatus string, l_shipdate string",
-    ).selectExpr(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_linenumber",
-        "l_quantity", "l_extendedprice", "l_discount", "l_tax",
-        "l_returnflag", "l_linestatus",
-        "CAST(l_shipdate AS TIMESTAMP_NTZ) AS l_shipdate",
-    )
-    df.coalesce(1).write.parquet(str(tmp_path / "lineitem.parquet"))
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "lineitem", rows)
 
 
 def test_item_cooccurrence_distinct_and_singleton_parity(spark, edge_lineitem):
@@ -259,8 +224,8 @@ def test_item_cooccurrence_distinct_and_singleton_parity(spark, edge_lineitem):
     single-part baskets emit nothing; cosine of a unique pair of
     once-seen parts is exactly 1.0."""
     spec = REGISTRY["item_cooccurrence_topk"]
-    df = spec.spark_fn(spark, edge_lineitem)
-    con = _duck_for(edge_lineitem, ["lineitem"])
+    sf, con = edge_lineitem
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "cooc_edge")
     rows = df.collect()
     assert len(rows) == 1
@@ -278,20 +243,13 @@ def all_converted_events(spark, tmp_path):
         for u in (1, 2)
         for i in range(15)
     ]
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "events", rows, _EVENTS_NS)
 
 
 def test_ztest_degenerate_all_convert_parity(spark, all_converted_events):
     spec = REGISTRY["ztest_conversion_ab"]
-    df = spec.spark_fn(spark, all_converted_events)
-    con = _duck_for(all_converted_events, ["events"])
+    sf, con = all_converted_events
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "ztest_degenerate_edge")
     row = df.collect()[0]
     assert (row.n_a, row.x_a, row.n_b, row.x_b) == (1, 1, 1, 1)
@@ -302,8 +260,8 @@ def test_cohort_ltv_views_only_cohort_parity(spark, edge_events):
     """A cohort with zero purchase revenue: LTV rows exist (users are
     active) with ltv_per_user exactly 0."""
     spec = REGISTRY["cohort_ltv_curve"]
-    df = spec.spark_fn(spark, edge_events)
-    con = _duck_for(edge_events, ["events"])
+    sf, con = edge_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace(
         "EXTRACT(year FROM ts)", "EXTRACT(year FROM make_timestamp(ts // 1000))"
     ).replace(
@@ -322,8 +280,8 @@ def test_seasonal_decompose_short_series_is_empty(spark, edge_orders):
     window, so BOTH engines must return an empty relation (the
     trend-undefined edge, not a null-effect row)."""
     spec = REGISTRY["seasonal_decompose_weekday"]
-    df = spec.spark_fn(spark, edge_orders)
-    con = _duck_for(edge_orders, ["orders"])
+    sf, con = edge_orders
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "seasonal_short_edge")
     assert df.count() == 0
 
@@ -343,20 +301,13 @@ def metronome_events(spark, tmp_path):
             (23, 104 * ns, 3, "view", 1.0, "{}"),
         ]
     )
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "events", rows, _EVENTS_NS)
 
 
 def test_burstiness_regular_and_no_gap_users_parity(spark, metronome_events):
     spec = REGISTRY["burstiness_user_interarrival"]
-    df = spec.spark_fn(spark, metronome_events)
-    con = _duck_for(metronome_events, ["events"])
+    sf, con = metronome_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "burstiness_edge")
     bins = {r.b_bin: r for r in df.collect()}
@@ -476,20 +427,13 @@ def bounce_events(spark, tmp_path):
         (4, 23 * h + 3000 * ns, 3, "view", 1.0, "{}"),
         (5, 24 * h + 300 * ns, 3, "view", 1.0, "{}"),
     ]
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "events", rows, _EVENTS_NS)
 
 
 def test_bounce_rate_midnight_session_counts_once_parity(spark, bounce_events):
     spec = REGISTRY["session_bounce_rate"]
-    df = spec.spark_fn(spark, bounce_events)
-    con = _duck_for(bounce_events, ["events"])
+    sf, con = bounce_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "bounce_edge")
     rows = {r.start_day: r for r in df.collect()}
@@ -580,20 +524,13 @@ def post_only_events(spark, tmp_path):
         (3, 90 * ns, 1, "purchase", 5.00, "{}"),
         (4, 100 * ns, 2, "purchase", 7.00, "{}"),
     ]
-    schema = (
-        "event_id bigint, ts bigint, user_id bigint,"
-        " event_type string, value double, props string"
-    )
-    spark.createDataFrame(rows, schema).coalesce(1).write.parquet(
-        str(tmp_path / "events.parquet")
-    )
-    return str(tmp_path)
+    return write_table(spark, tmp_path, "events", rows, _EVENTS_NS)
 
 
 def test_did_null_pre_cells_parity(spark, post_only_events):
     spec = REGISTRY["diff_in_diff_purchase"]
-    df = spec.spark_fn(spark, post_only_events)
-    con = _duck_for(post_only_events, ["events"])
+    sf, con = post_only_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "did_edge")
     row = df.collect()[0]
@@ -605,8 +542,8 @@ def test_did_null_pre_cells_parity(spark, post_only_events):
 
 def test_cuped_constant_covariate_parity(spark, post_only_events):
     spec = REGISTRY["cuped_variance_reduction"]
-    df = spec.spark_fn(spark, post_only_events)
-    con = _duck_for(post_only_events, ["events"])
+    sf, con = post_only_events
+    df = spec.spark_fn(spark, sf)
     oracle = spec.oracle.replace("epoch_ns(ts)", "ts")
     assert_oracle_match(df, con, oracle, "cuped_edge")
     row = df.collect()[0]
@@ -725,8 +662,8 @@ def test_seasonal_anomaly_short_series_empty(spark, edge_orders):
     """3 days < the 7-day trend window: no residual series exists, so
     the report is empty in both engines (no NULL-threshold crash)."""
     spec = REGISTRY["seasonal_residual_anomalies"]
-    df = spec.spark_fn(spark, edge_orders)
-    con = _duck_for(edge_orders, ["orders"])
+    sf, con = edge_orders
+    df = spec.spark_fn(spark, sf)
     assert_oracle_match(df, con, spec.oracle, "sra_short_edge")
     assert df.count() == 0
 

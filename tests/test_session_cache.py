@@ -20,7 +20,7 @@ from etl_pipeline_spark.utils.session_cache import (
     register_cache,
     session_key,
 )
-from tests.conftest import SF_DIR, assert_memo_round_trip
+from tests.conftest import SF_DIR, SF_TINY_DIR, assert_memo_round_trip
 
 _ensure_loaded()
 
@@ -78,6 +78,22 @@ def test_clear_caches_handles_tuple_values_and_other_sessions(spark):
     assert list(cache) == [("some-other-app-id", "foreign")]
     clear_caches()  # None → everything
     assert cache == {}
+
+
+def test_clearing_one_session_keeps_another_sessions_relation_cached(spark):
+    """Plan-identical memo relations of two sessions of one context share
+    one CacheManager entry: clearing the first session must not uncache
+    the relation the second session's memo still returns."""
+    from etl_pipeline_spark.plans.tpch_extended import _partsupp
+
+    first, second = spark.newSession(), spark.newSession()
+    _partsupp(first, SF_TINY_DIR)
+    rel = _partsupp(second, SF_TINY_DIR)
+    clear_caches(first)
+    assert rel.storageLevel.useMemory
+    assert _partsupp(second, SF_TINY_DIR) is rel
+    clear_caches(second)
+    assert not rel.storageLevel.useMemory
 
 
 def test_shingle_and_edge_caches_round_trip(spark):
