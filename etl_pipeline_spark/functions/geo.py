@@ -248,9 +248,16 @@ def _parse_epsg(crs: str | int) -> int:
     return int(m)
 
 
+def _quoted(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _sql_column(name: str) -> _Sql:
-    quoted = name.replace("`", "``")
-    return _Sql(f"CAST(`{quoted}` AS DOUBLE)")
+    return _Sql(f"CAST({_quoted(name)} AS DOUBLE)")
+
+
+def _aliased(text: str, name: str) -> str:
+    return f"{text} AS {_quoted(name)}"
 
 
 def reproject(df: DataFrame, x: str, y: str, src: str | int, dst: str | int,
@@ -274,13 +281,14 @@ def reproject(df: DataFrame, x: str, y: str, src: str | int, dst: str | int,
         vx, vy = _tm_inverse_series(m, vx, vy, s)
     if d != 4326:
         vx, vy = _tm_forward_series(m, vx, vy, d)
+    # selectExpr, not F.expr: SQL text resolves no py4j ``functions`` view
     out = df
     for stage in m.stages:
-        out = out.select("*", *(F.expr(text).alias(name) for name, text in stage))
-    out = out.select(
+        out = out.selectExpr("*", *(_aliased(text, name) for name, text in stage))
+    out = out.selectExpr(
         "*",
-        F.expr(f"nanvl({vx.text}, CAST(NULL AS DOUBLE))").alias(out_x),
-        F.expr(f"nanvl({vy.text}, CAST(NULL AS DOUBLE))").alias(out_y),
+        _aliased(f"nanvl({vx.text}, CAST(NULL AS DOUBLE))", out_x),
+        _aliased(f"nanvl({vy.text}, CAST(NULL AS DOUBLE))", out_y),
     )
     return out.drop(*(name for stage in m.stages for name, _ in stage))
 

@@ -18,10 +18,10 @@ Reference lifecycle: cleanup → download → stage → geoprocess → SDE load
 The transform phase applies, when configured: bbox clip (points: pushed
 range predicate; polygons: exact Sutherland–Hodgman), reprojection
 (EPSG:4326→3006 by default, Spark SQL math), and fc-name generation via the
-naming kernel. A point source's load is therefore one job that runs only in
-the JVM (a JSON source adds its schema-inference job at stage); the sink
-counts the rows it writes inside that job, and the run records them per
-feature class in ``RunSummary.rows_out``.
+naming kernel. Staging a GeoJSON source fires no job (its schema is
+inferred on the driver), so a point source's run is one job, its write,
+which runs only in the JVM; the sink counts the rows it writes inside that
+job, and the run records them per feature class in ``RunSummary.rows_out``.
 """
 
 from __future__ import annotations

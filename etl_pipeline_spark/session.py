@@ -12,6 +12,12 @@ on a real cluster:
 - Arrow enabled for any pandas interchange (vectorized UDF path).
 - Session timezone pinned to UTC so timestamp semantics are deterministic
   regardless of host timezone.
+- PySpark's DataFrame call-site capture off: with it on, every ``F.*`` call
+  and ``Column`` method first sends its Python call site to the JVM (about
+  13 py4j round trips around a call that takes 3), so error contexts carry
+  the failing DataFrame call but plan building pays for it on every call.
+  PySpark reads the flag once per process, at its first ``F.*`` call after
+  a session exists.
 """
 
 from __future__ import annotations
@@ -59,6 +65,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.python.filterPushdown.enabled", "true")
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )

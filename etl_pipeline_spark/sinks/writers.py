@@ -67,6 +67,13 @@ def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
     return df.observe(obs, F.count(F.lit(1)).alias("rows")), obs
 
 
+def _by_name(df: DataFrame, cols) -> DataFrame:
+    """``df.select(*cols)`` as one ``selectExpr`` over backquoted names: a
+    by-name ``select`` resolves ``functions.col`` through py4j once per
+    column, SQL text makes no such lookup."""
+    return df.selectExpr(*("`" + c.replace("`", "``") + "`" for c in cols))
+
+
 def _require_database(spark: SparkSession, table: str) -> None:
     """K5: refuse to create a missing namespace (reference refuses missing
     SDE datasets and points at the provisioning script instead)."""
@@ -91,7 +98,7 @@ def truncate_and_load(
         missing = set(target_cols) - set(df.columns)
         if missing:
             raise ValueError(f"truncate_and_load into {table}: df missing {sorted(missing)}")
-        counted, obs = _counted(df.select(*target_cols))
+        counted, obs = _counted(_by_name(df, target_cols))
         counted.write.insertInto(table, overwrite=True)
     else:
         counted, obs = _counted(df)
@@ -124,7 +131,7 @@ def append(df: DataFrame, table: str) -> LoadReport:
                 f"append into {table}: column mismatch df={sorted(df.columns)} "
                 f"table={sorted(target_cols)}"
             )
-        counted, obs = _counted(df.select(*target_cols))
+        counted, obs = _counted(_by_name(df, target_cols))
         counted.write.insertInto(table, overwrite=False)
     else:
         counted, obs = _counted(df)
@@ -198,11 +205,11 @@ def merge_upsert(
     if missing:
         raise ValueError(f"merge_upsert into {table}: key columns missing {sorted(missing)}")
     survivors = target.join(updates, on=list(key_cols), how="leftanti")
-    merged = survivors.select(*target.columns).unionByName(updates.select(*target.columns))
+    merged = _by_name(survivors, target.columns).unionByName(_by_name(updates, target.columns))
     staging = f"{table}__merge_staging"
     merged.write.mode("overwrite").saveAsTable(staging)
     try:
-        counted, obs = _counted(spark.table(staging).select(*target.columns))
+        counted, obs = _counted(_by_name(spark.table(staging), target.columns))
         counted.write.insertInto(table, overwrite=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {staging}")
@@ -263,6 +270,6 @@ def append_evolve(df: DataFrame, table: str) -> LoadReport:
         finally:
             spark.sql(f"DROP TABLE IF EXISTS {staging}")
     else:
-        counted, obs = _counted(df.select(*target.keys()))
+        counted, obs = _counted(_by_name(df, target))
         counted.write.insertInto(table, overwrite=False)
     return LoadReport(table, "append_evolve", obs.get["rows"], tuple(df.columns))

@@ -5,8 +5,10 @@ etl/handlers/ogc_api.py, Atom: etl/handlers/atom_feed.py, files:
 etl/handlers/file.py) interleave HTTP, pagination, retry, and file writing in
 ~2.2k LoC. Here the *protocol semantics* are isolated, deterministic and
 transport-injected; the output is a landing zone of JSON files that
-`spark.read.json` picks up, making executor-side scale-out (one partition
-per layer/collection) a driver-side partition-planning concern.
+`geojson.load_feature_collection` stages: the driver infers each file's
+schema (`geojson.json_schema`, no Spark job) and `spark.read.json` parses
+it on executors under that schema, making executor-side scale-out (one
+partition per layer/collection) a driver-side partition-planning concern.
 
 Kept semantics, each with the reference site:
 

@@ -80,6 +80,16 @@ def test_reproject_dataframe(spark):
     assert back.y_out == pytest.approx(n10[0], abs=1e-5)
 
 
+def test_reproject_takes_backtick_and_space_names(spark):
+    """The projections are SQL text: input and output names are quoted,
+    a backtick inside a name escaped."""
+    df = spark.createDataFrame([(18.06, 59.33)], "`lo``n` double, `la t` double")
+    row = reproject(df, "lo`n", "la t", 4326, 3006, out_x="e`x", out_y="n y").collect()[0]
+    e, n = tm_forward(np.array([18.06]), np.array([59.33]), 3006)
+    assert df.columns == ["lo`n", "la t"]
+    assert (row["e`x"], row["n y"]) == (pytest.approx(e[0], abs=1e-6), pytest.approx(n[0], abs=1e-6))
+
+
 def test_unsupported_crs_refused(spark):
     df = spark.createDataFrame([(1.0, 2.0)], "x double, y double")
     with pytest.raises(ValueError, match="unsupported CRS"):

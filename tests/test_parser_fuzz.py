@@ -247,6 +247,19 @@ def test_gpkg_loader_cannot_mutate_source(tmp_path):
 
 _FC_COLS = ["geom_type", "coordinates_json", "x", "y", "crs_name"]
 
+# the JSON payloads the loader tests stage; tests/test_geojson_schema.py
+# checks the driver-side schema inference against Spark's on each
+GEOJSON_TOPOLOGY = b'{"type": "Topology", "objects": {}}'
+GEOJSON_EMPTY_FC = b'{"type": "FeatureCollection", "features": []}'
+GEOJSON_NULL_GEOMETRY_FC = (
+    b'{"type": "FeatureCollection", "features": ['
+    b'{"type": "Feature", "properties": {"a": 1}, "geometry": null}]}'
+)
+GEOJSON_STRING_CRS_FC = (
+    b'{"type": "FeatureCollection", "crs": "EPSG:4326", "features": ['
+    b'{"type": "Feature", "geometry": {"type": "Point", "coordinates": [1.5, 2.5]}}]}'
+)
+
 
 def _write_geojson(tmp_path, payload: bytes) -> str:
     p = tmp_path / "f.geojson"
@@ -265,7 +278,7 @@ def test_geojson_non_json_raises_valueerror(spark, tmp_path):
 def test_geojson_json_without_features_raises(spark, tmp_path):
     from etl_pipeline_spark.sources.geojson import load_feature_collection
 
-    p = _write_geojson(tmp_path, b'{"type": "Topology", "objects": {}}')
+    p = _write_geojson(tmp_path, GEOJSON_TOPOLOGY)
     with pytest.raises(ValueError, match="not a GeoJSON FeatureCollection"):
         load_feature_collection(spark, p)
 
@@ -275,7 +288,7 @@ def test_geojson_empty_feature_collection_is_legal(spark, tmp_path):
     # struct). Pre-fix: AnalysisException from feature.geometry extraction.
     from etl_pipeline_spark.sources.geojson import load_feature_collection
 
-    p = _write_geojson(tmp_path, b'{"type": "FeatureCollection", "features": []}')
+    p = _write_geojson(tmp_path, GEOJSON_EMPTY_FC)
     df = load_feature_collection(spark, p)
     assert df.columns == _FC_COLS
     assert df.count() == 0
@@ -285,11 +298,7 @@ def test_geojson_all_null_geometry_is_legal(spark, tmp_path):
     # spec-legal: unlocated features (geometry: null) — NULL geom columns
     from etl_pipeline_spark.sources.geojson import load_feature_collection
 
-    p = _write_geojson(
-        tmp_path,
-        b'{"type": "FeatureCollection", "features": ['
-        b'{"type": "Feature", "properties": {"a": 1}, "geometry": null}]}',
-    )
+    p = _write_geojson(tmp_path, GEOJSON_NULL_GEOMETRY_FC)
     row = load_feature_collection(spark, p).collect()[0]
     assert row["a"] == 1
     assert row["geom_type"] is None and row["x"] is None and row["y"] is None
@@ -300,16 +309,30 @@ def test_geojson_missing_properties_and_string_crs(spark, tmp_path):
     # both degraded pre-fix to AnalysisException
     from etl_pipeline_spark.sources.geojson import load_feature_collection
 
-    p = _write_geojson(
-        tmp_path,
-        b'{"type": "FeatureCollection", "crs": "EPSG:4326", "features": ['
-        b'{"type": "Feature", "geometry": {"type": "Point", "coordinates": [1.5, 2.5]}}]}',
-    )
+    p = _write_geojson(tmp_path, GEOJSON_STRING_CRS_FC)
     df = load_feature_collection(spark, p)
     assert df.columns == _FC_COLS
     row = df.collect()[0]
     assert row["geom_type"] == "Point" and row["x"] == 1.5 and row["y"] == 2.5
     assert row["crs_name"] is None
+
+
+@pytest.mark.parametrize(
+    "x, y", [(0.0001, 51.5), (-0.00005, 51.5), (500000.0, 12345678.5)],
+    ids=["small_x", "small_negative_x", "large_y"],
+)
+def test_geojson_exponent_coordinates(spark, tmp_path, x, y):
+    # to_json writes |v| < 1e-3 and |v| >= 1e7 in exponent notation
+    # (1.0E-4, 1.23456785E7); the x/y pair must read the whole number
+    from etl_pipeline_spark.sources.geojson import load_feature_collection
+
+    p = _write_geojson(
+        tmp_path,
+        b'{"type": "FeatureCollection", "features": [{"type": "Feature", "properties": {},'
+        b' "geometry": {"type": "Point", "coordinates": [%r, %r]}}]}' % (x, y),
+    )
+    row = load_feature_collection(spark, p).collect()[0]
+    assert (row["x"], row["y"]) == (x, y), row["coordinates_json"]
 
 
 # --------------------------------------------------------------------------

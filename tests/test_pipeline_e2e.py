@@ -402,11 +402,11 @@ def test_pipeline_atom_feed_relative_hrefs(spark, tmp_path):
     [((15.5, 58.0, 25.0, 61.0), 5), ((100.0, 0.0, 101.0, 1.0), 0)],
     ids=["clips_some", "clips_all"],
 )
-def test_pipeline_run_is_two_jobs_and_records_rows_out(spark, tmp_path, prod_db, aoi, kept):
-    """One REST source is two Spark jobs: the JSON schema inference at
-    stage and the write, which also counts the rows for
-    ``RunSummary.rows_out`` — on the run that creates the table and on the
-    rerun that overwrites it."""
+def test_pipeline_run_is_one_job_and_records_rows_out(spark, tmp_path, prod_db, aoi, kept):
+    """One REST source is one Spark job, the write, which also counts the
+    rows for ``RunSummary.rows_out`` — on the run that creates the table
+    and on the rerun that overwrites it. Staging infers the landing
+    file's schema on the driver and fires no job."""
     src = SourceConfig(name="Vägar Källa", authority="TRV", type="rest_api",
                        url="https://x/FeatureServer")
     table = f"{prod_db}.trv_vagar_kalla_layer0"
@@ -416,6 +416,6 @@ def test_pipeline_run_is_two_jobs_and_records_rows_out(spark, tmp_path, prod_db,
         pipe = Pipeline(spark, cfg, transport=FakeTransport())
         summaries = []
         jobs = jobs_fired(spark, lambda: summaries.append(pipe.run([src])))
-        assert len(jobs) == 2, (run, jobs)
+        assert len(jobs) == 1, (run, jobs)
         assert summaries[0].rows_out == {("Vägar Källa", "trv_vagar_kalla_layer0"): kept}
         assert spark.table(table).count() == kept

@@ -206,3 +206,27 @@ def test_load_report_rows_is_the_table_count(spark, db, n):
         t = f"{db}.fc_rows_{n}"
         rep = sink(_df(spark, rows), t)
         assert rep.rows == spark.table(t).count() == n, sink.__name__
+
+
+def test_by_name_sinks_take_a_backtick_column(spark, db):
+    """The by-name alignment is SQL text over backquoted names: a backtick
+    inside a column name is escaped, not a parse error. The frame's columns
+    come in the other order than the table's, so each write must align."""
+    from etl_pipeline_spark.sinks import append_evolve
+    from etl_pipeline_spark.sinks.writers import merge_upsert
+
+    def frame(rows):
+        return spark.createDataFrame(rows, "`a``b` string, id int")
+
+    for sink in (truncate_and_load, append, append_evolve, merge_upsert):
+        t = f"{db}.fc_backtick_{sink.__name__}"
+        replace(spark.createDataFrame([(1, "x")], "id int, `a``b` string"), t)
+        args = (["id"],) if sink is merge_upsert else ()
+        sink(frame([("y", 1), ("z", 2)]), t, *args)
+        got = sorted(tuple(r) for r in spark.table(t).collect())
+        want = {
+            "truncate_and_load": [(1, "y"), (2, "z")],
+            "merge_upsert": [(1, "y"), (2, "z")],
+        }.get(sink.__name__, [(1, "x"), (1, "y"), (2, "z")])
+        assert spark.table(t).columns == ["id", "a`b"], sink.__name__
+        assert got == want, sink.__name__

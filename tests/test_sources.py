@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import ast
 import json
+from pathlib import Path
 
 import pytest
 
@@ -98,3 +100,40 @@ def test_load_sources_ordering_and_dimension(spark):
     row = {r.name: r for r in dim.collect()}
     assert row["high"].include == ["lay1", "lay2"]
     assert row["off"].enabled is False
+
+
+_SOURCES = Path(__file__).resolve().parent.parent / "etl_pipeline_spark" / "sources"
+
+
+def _chain(node: ast.AST) -> list[str]:
+    """Attribute names along a call chain, outermost first:
+    ``spark.read.schema(s).json(p)`` → json, schema, read, spark."""
+    names = []
+    while True:
+        if isinstance(node, ast.Call):
+            node = node.func
+        elif isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            if isinstance(node, ast.Name):
+                names.append(node.id)
+            return names
+
+
+def test_source_reads_carry_a_schema():
+    """No module under ``sources/`` reads JSON, parquet or CSV without
+    ``.schema(...)``: an inferring read fires a job (``star.parquet_schema``
+    and ``geojson.json_schema`` infer on the driver instead)."""
+    reads, offenders = 0, []
+    for path in sorted(_SOURCES.glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if not (isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)):
+                continue
+            chain = _chain(node)
+            if chain[0] in ("json", "parquet", "csv") and {"read", "readStream"} & set(chain):
+                reads += 1
+                if "schema" not in chain:
+                    offenders.append(f"{path.name}:{node.lineno}")
+    assert reads > 0  # the walk sees the readers it polices
+    assert offenders == []
