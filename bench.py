@@ -10,8 +10,9 @@ best of 2 passes into the ``noop`` sink, session memos and the
 CacheManager cleared before every pass (the r12 rule; old-methodology
 totals for the same tree are in OPTIMIZATION_r12.md). bench_out*.json
 also carries each query's record under "records": the walls of both
-passes and the jobs, stages, tasks, executor, shuffle and spill figures
-of the best one, read outside the timed window.
+passes and, of the best one, the plan-build and action seconds, the
+Janino compiles, and the jobs, stages, tasks, executor, shuffle and
+spill figures, read outside the timed window.
 """
 
 from __future__ import annotations

@@ -10,15 +10,25 @@ pays that build inside each of its own passes, and no pass can hit what
 the previous query or pass persisted. Clearing before both passes
 matters: clearing only the second would let best-of-2 pick a first pass
 that hit the previous query's relations. What survives across passes is
-what honest reuse allows: JVM JIT, Janino's generated-class cache and
-warm executor threads. Best-of-2 then measures the plan, not the one-off
-costs of a first execution (expression compile, classloading, broadcast
-thread spin-up) that scheduling overlap turns into >2x swings.
+what honest reuse allows: JVM JIT, warm executor threads and Spark's
+generated-class cache. That cache keeps a class only while it fits
+(``session.CODEGEN_CACHE_ENTRIES``): at Spark's default of 100 entries a
+large query evicted its own classes and its second pass compiled many
+of them again (``textrank_keywords`` 48-69 of its 102,
+``dedup_canonical_pick`` 35-67 of 95); with ``get_spark``'s cache both
+compile 0. ``codegen_compiles`` in the record counts the Janino compiles
+during the best pass, plan build and action, so a pass that compiled
+shows. Best-of-2 thus measures the plan, not a compile, nor the other
+one-off costs of a first execution (classloading, broadcast thread
+spin-up) that scheduling overlap turns into >2x swings.
 
-Each pass runs in its own job group. After the pass, outside its timed
-window, the group's job ids come from ``statusTracker`` and each stage's
-figures from the JVM status store (``AppStatusStore.stageData``), which
-the listener bus fills whether or not the Spark UI is enabled.
+Each pass times the Python plan build (``build_s``, including any jobs
+the build fires) apart from the ``noop`` action (``action_s``); its wall
+is their sum. Each pass runs in its own job group. After the pass,
+outside its timed window, the group's job ids come from
+``statusTracker`` and each stage's figures from the JVM status store
+(``AppStatusStore.stageData``), which the listener bus fills whether or
+not the Spark UI is enabled.
 """
 
 from __future__ import annotations
@@ -55,9 +65,15 @@ class Stage:
 
 @dataclass(frozen=True)
 class Pass:
-    wall: float
+    build: float
+    action: float
+    compiles: int
     jobs: list[int]
     stages: list[Stage]
+
+    @property
+    def wall(self) -> float:
+        return self.build + self.action
 
 
 def run_noop(df: DataFrame) -> None:
@@ -131,6 +147,14 @@ def stages_of(spark: SparkSession, jobs: list[int]) -> list[Stage]:
     return stages
 
 
+def codegen_compiles(spark: SparkSession) -> int:
+    """Janino compiles so far in this JVM: the sample count of Spark's
+    compile-time histogram, which each compile adds to and a cache hit
+    does not."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return metrics.METRIC_COMPILATION_TIME().getCount()
+
+
 def warm_up(spark: SparkSession, sf_dir: str) -> None:
     """One JVM/codegen warm-up on the smallest query, so the first timed
     query measures its plan, not first-call JIT."""
@@ -147,16 +171,21 @@ def run_passes(spark: SparkSession, name: str, sf_dir: str) -> list[Pass]:
         clear_caches(spark)
         spark.catalog.clearCache()
         group = f"measure-{name}-{uuid.uuid4().hex}"
-        wall = in_job_group(spark, group, lambda: _timed_noop(spark, fn, sf_dir))
+        before = codegen_compiles(spark)
+        build, action = in_job_group(spark, group, lambda: _timed_noop(spark, fn, sf_dir))
+        compiles = codegen_compiles(spark) - before
         jobs = group_jobs(spark, group)
-        passes.append(Pass(wall, jobs, stages_of(spark, jobs)))
+        passes.append(Pass(build, action, compiles, jobs, stages_of(spark, jobs)))
     return passes
 
 
-def _timed_noop(spark: SparkSession, fn, sf_dir: str) -> float:
+def _timed_noop(spark: SparkSession, fn, sf_dir: str) -> tuple[float, float]:
+    """Seconds to build the plan and seconds to run it into ``noop``."""
     t0 = time.perf_counter()
-    run_noop(fn(spark, sf_dir))
-    return time.perf_counter() - t0
+    df = fn(spark, sf_dir)
+    t1 = time.perf_counter()
+    run_noop(df)
+    return t1 - t0, time.perf_counter() - t1
 
 
 def best_pass(passes: list[Pass]) -> Pass:
@@ -171,6 +200,9 @@ def record(passes: list[Pass]) -> dict:
     return {
         "best_s": best.wall,
         "walls": [p.wall for p in passes],
+        "build_s": best.build,
+        "action_s": best.action,
+        "codegen_compiles": best.compiles,
         "jobs": len(best.jobs),
         "stages": len({s.id for s in ran}),
         "tasks": sum(s.tasks for s in ran),

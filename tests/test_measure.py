@@ -7,6 +7,8 @@ from __future__ import annotations
 import re
 from pathlib import Path
 
+import pytest
+
 from etl_pipeline_spark.utils import measure
 from etl_pipeline_spark.utils.session_cache import clear_caches
 from tests.conftest import SF_TINY_DIR
@@ -20,6 +22,9 @@ _PROFILE_ENV = re.compile(r"environ[^\n]*[\"']PROFILE_")
 RECORD_KEYS = {
     "best_s",
     "walls",
+    "build_s",
+    "action_s",
+    "codegen_compiles",
     "jobs",
     "stages",
     "tasks",
@@ -52,6 +57,9 @@ def test_record_schema(spark):
     assert set(rec) == RECORD_KEYS
     assert len(rec["walls"]) == measure.PASSES
     assert rec["best_s"] == min(rec["walls"])
+    assert rec["build_s"] + rec["action_s"] == pytest.approx(rec["best_s"])
+    assert rec["build_s"] > 0 and rec["action_s"] > 0
+    assert isinstance(rec["codegen_compiles"], int) and rec["codegen_compiles"] >= 0
     assert rec["jobs"] > 0 and rec["stages"] > 0
     assert rec["tasks"] >= rec["stages"]
 
